@@ -21,7 +21,8 @@ or locally:
     PYTHONPATH=. python jobs/kg_job.py --synthetic 10000 --stage-root /tmp/kg
 
 Reruns resume from the last committed stage (StageStore); pass
---no-store for a one-shot in-memory run (fused text plane).
+--no-store for a one-shot in-memory run of the same docs -> plane
+chain (no checkpoints, no resume).
 """
 
 from __future__ import annotations
@@ -50,7 +51,8 @@ def parse_args(argv):
                    help="StageStore backend (default parquet); 'iceberg' "
                         "treats --stage-root as <catalog>.<namespace> and "
                         "requires the Iceberg runtime jar on the session")
-    p.add_argument("--no-store", action="store_true", help="storeless fused run (no resume)")
+    p.add_argument("--no-store", action="store_true",
+                   help="in-memory run of the same stage chain (no resume)")
     p.add_argument("--salt-partitions", type=int, default=None, help="J7 hub-key salting width")
     p.add_argument("--master", default=None, help="override spark master (default env/local)")
     p.add_argument("--seed", type=int, default=None)

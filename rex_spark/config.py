@@ -49,7 +49,7 @@ class PipelineConfig:
     # canonicalization
     driver_max_surfaces: int | None = None
     # documents-stage corpus-quality filters (operators/docfilters.py);
-    # all None/False = filters off, fused single-crossing plane kept
+    # all None/False = filters off
     min_quality: float | None = None
     max_top_token_frac: float | None = None
     max_rep_2gram_frac: float | None = None

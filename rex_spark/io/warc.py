@@ -164,12 +164,13 @@ def parse_warc(payload: bytes) -> List[Tuple[str, dt.datetime, bytes]]:
     return list(iter_warc(payload))
 
 
-def read_warc(spark, path: str, corrupt: str = "fail"):
-    """Directory (or glob) of *.warc / *.warc.gz files -> DataFrame
-    (url, warc_ts, html).  One input task per FILE (binaryFile
-    source); records fan out inside the Arrow batch, so the only
-    parallelism knob is the file count — exactly the Common-Crawl
-    layout's contract.  html carries the HTTP response body bytes.
+def warc_records(files, corrupt: str = "fail"):
+    """binaryFile rows (batch or streaming) -> DataFrame (url,
+    warc_ts, html): the record fan-out shared by ``read_warc`` and
+    ``streaming.stream_warc_pages``.  One input task per FILE; records
+    fan out inside the Arrow batch, so the only parallelism knob is the
+    file count — exactly the Common-Crawl layout's contract.  html
+    carries the HTTP response body bytes.
 
     ``corrupt``: ``"fail"`` (default, strict — a bad byte fails the
     task) or ``"skip"`` — keep every record parsed before the first
@@ -195,7 +196,6 @@ def read_warc(spark, path: str, corrupt: str = "fail"):
             StructField("html", BinaryType(), False),
         ]
     )
-    files = spark.read.format("binaryFile").load(path).select("content")
 
     def expand(batches):
         # bounded output frames: a 1 GB crawl file must never become
@@ -224,4 +224,11 @@ def read_warc(spark, path: str, corrupt: str = "fail"):
         if rows:
             yield pd.DataFrame(rows, columns=["url", "warc_ts", "html"])
 
-    return files.mapInPandas(expand, schema=schema)
+    return files.select("content").mapInPandas(expand, schema=schema)
+
+
+def read_warc(spark, path: str, corrupt: str = "fail"):
+    """Directory (or glob) of *.warc / *.warc.gz files -> DataFrame
+    (url, warc_ts, html) via :func:`warc_records` (``corrupt`` as
+    there)."""
+    return warc_records(spark.read.format("binaryFile").load(path), corrupt)

@@ -416,10 +416,10 @@ def extract_pdf_text(payload: bytes) -> list[str]:
             continue
         # /Contents may be one ref or an array of refs
         refs = [int(n) for n, _g in re.findall(rb"(\d+)\s+(\d+)\s+R", contents)]
-        data = b"".join(
-            _stream_data(objs[r]) for r in refs if r in objs
-        ) if refs else b""
-        if refs and not data and all(r not in objs for r in refs):
+        # one unresolvable ref means the page text is partial: corrupt,
+        # never "ok" with wrong n_chars/text_md5
+        if any(r not in objs for r in refs):
             raise ValueError("page /Contents references missing objects")
+        data = b"".join(_stream_data(objs[r]) for r in refs)
         texts.append(_extract_stream_text(data))
     return texts

@@ -2,7 +2,7 @@
 
 Wires the standalone text-analysis family (quality scoring, Gopher
 repetition signals, language-ID, PII scrubbing) into ``run_pipeline``
-as optional filters between the docs and sentences stages — the point
+as optional filters inside the docs stage, before the plane — the point
 where a web-corpus run drops boilerplate / repetitive / wrong-language
 pages BEFORE paying for segmentation + pair extraction, exactly where
 production pretraining pipelines put them (Rae et al. 2021 App. A;
@@ -10,7 +10,7 @@ reference P9 validity-filter parity: rex/data/transforms/sent_re.py:
 44-58 logs per-transform drop counts the same way).
 
 Scale design: every signal here is per-row JVM expression work — no
-groupBy, no shuffle — so enabling all filters keeps the docs->sentences
+groupBy, no shuffle — so enabling all filters keeps the docs->plane
 text plane narrow.  The signal expressions are SHARED with the
 standalone oracle-checked query surfaces (textstats.quality_exprs /
 lang_exprs; repetition_exprs is the shuffle-free twin of
@@ -46,8 +46,8 @@ class DocFilters:
     """Declarative filter configuration for the documents stage.
 
     ``None`` disables the corresponding filter; ``active()`` is False
-    when nothing is enabled (the pipeline then keeps its fused
-    single-Arrow-crossing plane).  ``digest()`` feeds the stage-name
+    when nothing is enabled (the docs stage is then clean_pages
+    alone).  ``digest()`` feeds the stage-name
     suffix so a stage root written under one filter setting can never
     resume into a different one (kill/resume stays bit-identical per
     setting).

@@ -1,23 +1,19 @@
 """Extraction plane: mentions (NER), candidate pairs (J1), scored triples.
 
-Two equivalent paths, both built on the same kernels:
+The production path is ``extract_plane``: docs -> per-sentence rows
+carrying tokens, mentions and scored triples, in ONE Arrow crossing.
+Mentions and pairs never leave the executor, so the whole
+text->triple pipeline is shuffle-free; ``plane_sentences`` /
+``plane_mentions`` / ``plane_triples`` are JVM projections over it.
 
-1. **Composable stages** — ``detect_mentions`` -> ``candidate_pairs``
-   -> ``score_pairs``: each intermediate is a real DataFrame you can
-   checkpoint/inspect (REx exposes the same intermediates: entity
-   lists, candidate pairs per rex/data/transforms/sent_re.py:50-63,
-   per-pair scores per rex/models/sent_pcnn.py).
-
-2. **Fused path** — ``extract_triples_fused``: sentences -> scored
-   triples in ONE mapInPandas.  Mentions and pairs never leave the
-   executor, so the whole text->triple pipeline is shuffle-free; this
-   is the production path at 10^12 documents.  The e2e test asserts
-   both paths emit identical triple sets.
-
-Candidate generation avoids a two-sided shuffle join: mentions are
-grouped per sentence (one shuffle) and pairs expand in-partition via
-explode, rather than self-joining the mentions table (two shuffles +
-skew on hot sentences).
+``candidate_pairs`` -> ``score_pairs`` re-express the reference's
+intermediates as real DataFrames (candidate pairs per
+rex/data/transforms/sent_re.py:50-63, per-pair scores per
+rex/models/sent_pcnn.py), fed from ``plane_mentions``.  They avoid a
+two-sided shuffle join: mentions are grouped per sentence (one
+shuffle) and pairs expand in-partition via explode, rather than
+self-joining the mentions table (two shuffles + skew on hot
+sentences).
 """
 
 from __future__ import annotations
@@ -41,17 +37,6 @@ from pyspark.sql.types import (
 
 from ..kernels.extractor import extract_mentions, extract_sentence, score_pair
 
-MENTIONS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sent_id", IntegerType(), False),
-        StructField("ent_type", StringType(), False),
-        StructField("start", IntegerType(), False),
-        StructField("end", IntegerType(), False),
-        StructField("surface", StringType(), False),
-    ]
-)
-
 TRIPLES_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -67,28 +52,6 @@ TRIPLES_SCHEMA = StructType(
         StructField("score", FloatType(), False),
     ]
 )
-
-
-def detect_mentions(sentences: DataFrame) -> DataFrame:
-    """sentences -> one row per typed entity span (W1/M4 role)."""
-
-    def mention_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for url, sid, tokens in zip(pdf["url"], pdf["sent_id"], pdf["tokens"]):
-                for surface, etype, s, e in extract_mentions(list(tokens)):
-                    rows.append((url, sid, etype, s, e, surface))
-            yield pd.DataFrame(
-                rows, columns=["url", "sent_id", "ent_type", "start", "end", "surface"]
-            ).astype(
-                {"sent_id": "int32", "start": "int32", "end": "int32"}
-                if rows
-                else {}
-            )
-
-    return sentences.select("url", "sent_id", "tokens").mapInPandas(
-        mention_batches, schema=MENTIONS_SCHEMA
-    )
 
 
 def filter_valid_mentions(
@@ -220,47 +183,6 @@ def score_pairs(pairs: DataFrame, sentences: DataFrame) -> DataFrame:
     return dedup_keep_best(scored, ["url", "sent_id", "subj", "pred", "obj"])
 
 
-def extract_triples_fused(
-    sentences: DataFrame, max_pairs_per_sentence: int | None = 400
-) -> DataFrame:
-    """Fused sentences -> scored triples (shuffle-free production path).
-
-    Shares extract_sentence's pair-cap contract with extract_plane:
-    over-cap sentences take the exact gap-banded linear path (never
-    dropped, identical output); pass None for the reference-exact
-    quadratic kernel."""
-
-    def triple_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for url, wts, sid, tokens in zip(
-                pdf["url"], pdf["warc_ts"], pdf["sent_id"], pdf["tokens"]
-            ):
-                for subj, rel, obj, hs, he, ts, te, sc in extract_sentence(
-                    list(tokens), max_pairs=max_pairs_per_sentence
-                ):
-                    rows.append((url, wts, sid, subj, rel, obj, hs, he, ts, te, sc))
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "warc_ts", "sent_id", "subj", "pred", "obj",
-                    "h_start", "h_end", "t_start", "t_end", "score",
-                ],
-            )
-            if rows:
-                out = out.astype(
-                    {
-                        "sent_id": "int32", "h_start": "int32", "h_end": "int32",
-                        "t_start": "int32", "t_end": "int32", "score": "float32",
-                    }
-                )
-            yield out
-
-    return sentences.select("url", "warc_ts", "sent_id", "tokens").mapInPandas(
-        triple_batches, schema=TRIPLES_SCHEMA
-    )
-
-
 # Mentions and triples travel as PARALLEL PRIMITIVE ARRAYS, not
 # array<struct>: pyarrow converts list<string>/list<int> columns on a
 # C fast path, while list-of-dict struct columns fall back to per-
@@ -268,8 +190,9 @@ def extract_triples_fused(
 # per batch.  arrays_zip on the JVM side reassembles the structs.
 # warc_ts crosses the UDF boundary as int64 epoch-micros (warc_us):
 # timestamp columns pay tz/unit conversion per element on both sides
-# of the Arrow boundary, a plain long does not; plane_sentences /
-# plane_triples convert back with timestamp_micros (JVM-side, free).
+# of the Arrow boundary, a plain long does not; extract_plane turns it
+# back into warc_ts with timestamp_micros (JVM-side, free), so the
+# plane carries a real timestamp (the stage lineage watermark).
 PLANE_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -296,22 +219,20 @@ PLANE_SCHEMA = StructType(
 
 
 def extract_plane(
-    pages: DataFrame,
+    docs: DataFrame,
     include_text: bool = True,
     max_pairs_per_sentence: int | None = 400,
 ) -> DataFrame:
-    """pages -> per-sentence rows with nested mention/triple arrays, in
+    """docs -> per-sentence rows with nested mention/triple arrays, in
     ONE Arrow crossing.
 
-    The composable stages (clean_pages -> segment_sentences ->
-    detect_mentions / extract_triples_fused) each pay a full
-    JVM->Arrow->pandas->Arrow->JVM round trip over the whole text
-    plane; at benchmark scale those crossings dominate the actual
-    kernel CPU.  This operator runs the same kernels back to back
-    inside one mapInPandas and leaves the fan-out to JVM-side
-    ``explode`` (plane_mentions / plane_triples), which is narrow and
-    cheap.  Output is pinned identical to the composable path by
-    tests/test_pipeline_e2e.py.
+    ``docs`` is the clean_pages shape (url, warc_ts, lang,
+    clean_text).  Segmentation, tokenization, mention detection and
+    triple scoring run back to back inside one mapInArrow, and the
+    fan-out is left to JVM-side ``explode`` (plane_mentions /
+    plane_triples), which is narrow and cheap.  lang=='zh' selects zh
+    punctuation + char tokens; everything else uses en rules
+    (extractor.extract_document parity).
 
     ``max_pairs_per_sentence`` bounds the kernel's quadratic pair loop
     on pathological sentences (a page whose "sentence" repeats a
@@ -320,15 +241,14 @@ def extract_plane(
     the exact gap-banded linear path (extract_sentence_banded — output
     provably identical to the uncapped kernel) and emit with
     ``t_capped`` true so downstream lineage can still count them (P9
-    contract).  The store-path extract_triples_fused shares the same
-    kernel call, so both planes recover identically by construction.
+    contract).
     """
     import pyarrow as pa
 
-    from ..kernels.textnorm import html_to_text, sent_seg, tokenize
+    from ..kernels.textnorm import sent_seg, tokenize
 
-    src = pages.select(
-        "url", F.unix_micros("warc_ts").alias("warc_us"), "lang", "html"
+    src = docs.select(
+        "url", F.unix_micros("warc_ts").alias("warc_us"), "lang", "clean_text"
     )
 
     # Catalyst cannot prune columns THROUGH a map-in-arrow UDF, so
@@ -364,15 +284,14 @@ def extract_plane(
     def plane_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             cols = {k: [] for k in names}
-            for url, us, lang, html in zip(
+            for url, us, lang, text in zip(
                 rb.column(0).to_pylist(),
                 rb.column(1).to_pylist(),
                 rb.column(2).to_pylist(),
                 rb.column(3).to_pylist(),
             ):
-                text = html_to_text(html) if html is not None else ""
                 seg_lang = "zh" if lang == "zh" else "en"
-                for sid, sent in enumerate(sent_seg(text, lang=seg_lang)):
+                for sid, sent in enumerate(sent_seg(text or "", lang=seg_lang)):
                     toks = tokenize(sent, lang=seg_lang)
                     cols["url"].append(url)
                     cols["warc_us"].append(us)
@@ -408,18 +327,16 @@ def extract_plane(
                 schema=out_schema,
             )
 
-    return src.mapInArrow(plane_batches, schema=schema)
+    return src.mapInArrow(plane_batches, schema=schema).select(
+        "url", F.timestamp_micros("warc_us").alias("warc_ts"), *names[2:]
+    )
 
 
 def plane_sentences(plane: DataFrame) -> DataFrame:
-    return plane.select(
-        "url",
-        F.timestamp_micros("warc_us").alias("warc_ts"),
-        "lang",
-        "sent_id",
-        "sent",
-        "tokens",
-    )
+    """One row per sentence; ``sent``/``tokens`` only when the plane
+    carries them (extract_plane ``include_text``)."""
+    text = [c for c in ("sent", "tokens") if c in plane.columns]
+    return plane.select("url", "warc_ts", "lang", "sent_id", *text)
 
 
 def plane_mentions(plane: DataFrame) -> DataFrame:
@@ -443,7 +360,7 @@ def plane_mentions(plane: DataFrame) -> DataFrame:
 def plane_triples(plane: DataFrame) -> DataFrame:
     t = plane.select(
         "url",
-        F.timestamp_micros("warc_us").alias("warc_ts"),
+        "warc_ts",
         "sent_id",
         F.explode(
             F.arrays_zip(

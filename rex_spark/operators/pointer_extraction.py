@@ -43,7 +43,7 @@ def pointer_decode_sentence(
     Returns rows shaped like kernels.extractor.extract_sentence.
     ``max_pairs`` is the same whole-sentence pathological-pair cap as
     every other extraction mechanism (candidate_pairs / extract_plane /
-    extract_triples_fused / USM): len(mentions)^2 over the cap skips
+    USM): len(mentions)^2 over the cap skips
     the sentence.  The gold replica calls this function with the same
     default, so engine and oracle drop in lockstep.
     """
@@ -105,8 +105,9 @@ def pointer_decode_sentence(
 def casrel_extract(sentences: DataFrame) -> DataFrame:
     """sentences -> triples through the pointer-decode path (M3 slot).
 
-    Same stage interface and output schema as extract_triples_fused;
-    swap one for the other to swap extraction mechanisms.
+    Reads ``plane_sentences`` rows and emits TRIPLES_SCHEMA, like every
+    registered extractor; run_pipeline(extractor="casrel") swaps it into
+    the M1 slot.
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -98,9 +98,9 @@ def _kg_scalar_run(n_pages: int = KG_PAGES, seed: int = KG_SEED):
     for p in pages:
         clean = html_to_text(p["html"])
         # max_pairs=400: the SAME pair-cap contract as the engine's
-        # production paths (extract_plane / extract_triples_fused
-        # defaults) — over-cap sentences take the exact banded path on
-        # both sides, in lockstep by construction (same kernel call).
+        # production path (extract_plane's default) — over-cap
+        # sentences take the exact banded path on both sides, in
+        # lockstep by construction (same kernel call).
         # The deterministic corpus never reaches the cap anyway
         # (pinned by tests/test_drop_metrics.py::
         # test_corpus_never_hits_pair_cap), so this stays

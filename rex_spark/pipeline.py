@@ -1,22 +1,27 @@
 """End-to-end KG construction pipeline (the north-star DAG).
 
-pages (Iceberg-shaped input table) -> docs -> sentences -> triples
--> mentions -> canonical entities/edges, with optional StageStore
-checkpointing so a killed job resumes from the last committed stage.
+pages (Iceberg-shaped input table) -> docs -> plane -> canonical
+entities/edges, with optional StageStore checkpointing so a killed job
+resumes from the last committed stage.
 
 Stage graph (shuffle boundaries marked *):
 
-    pages --strip--> docs --segment--> sentences --fused extract--> triples
-                                           |                            |
-                                           +--mentions--> *surfaces     |
-                                                     *similarity edges  |
-                                                     *components        |
-                                                          +--> entities |
-                                                          +--> edges <--+
+    pages --strip--> docs --extract_plane--> plane
+                                               |-- sentences  (projection)
+                                               |-- triples    (projection)
+                                               +-- mentions   (projection)
+                                                      |
+                                       *surfaces <----+
+                                       *similarity edges
+                                       *components
+                                            +--> entities
+                                            +--> edges <-- triples
 
 The text plane is entirely narrow (zero shuffles from scan to triple
-emission); the graph plane owns the shuffles and is where skew handling
-(AQE skew join, salted support aggregation) lives.
+emission) and pays two Arrow crossings: the html strip (docs) and
+segmentation + mentions + triples (plane).  The graph plane owns the
+shuffles and is where skew handling (AQE skew join, salted support
+aggregation) lives.
 """
 
 from __future__ import annotations
@@ -33,11 +38,13 @@ from .operators.canonical import (
     entities_from_labeled,
 )
 from .operators.extraction import (
-    detect_mentions,
     document_triple_set,
-    extract_triples_fused,
+    extract_plane,
+    plane_mentions,
+    plane_sentences,
+    plane_triples,
 )
-from .operators.textplane import PAGES_SCHEMA, clean_pages, segment_sentences
+from .operators.textplane import PAGES_SCHEMA, clean_pages
 
 
 def build_pages_df(spark: SparkSession, n_pages: int, seed: int = 42) -> DataFrame:
@@ -109,51 +116,51 @@ def run_pipeline(
 ) -> Dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns all stage DataFrames.
 
-    With a StageStore, every stage is compute-or-load and appends
-    per-partition lineage rows (composable stages, one table each).
+    One chain, with or without a store:
 
-    Without one, the storeless path runs the FUSED text plane
-    (extract_plane: one Arrow crossing from pages to
-    sentences+mentions+triples, SURVEY §2.10 batching note) and
-    persists the nested plane MEMORY_AND_DISK so the several outputs
-    share one computation — the in-memory analog of the stage
-    checkpoints.  Both paths run identical kernels and are pinned
-    equal by tests/test_pipeline_e2e.py.
+    - ``docs``: clean_pages, plus apply_doc_filters when filters are
+      active;
+    - ``plane``: extract_plane(docs) — segmentation, tokens, mentions
+      and scored triples in ONE Arrow crossing (SURVEY §2.10 batching
+      note); ``sentences`` / ``mentions`` / ``triples`` are JVM
+      projections of it, not separate stages;
+    - ``surfaces`` -> ``entities`` / ``edges``: the graph plane.
+
+    With a StageStore every stage is compute-or-load and appends
+    per-partition lineage rows.  Without one the same calls run, and
+    the plane and surfaces are persisted MEMORY_AND_DISK so the several
+    outputs share one computation — the in-memory analog of the stage
+    checkpoints.  ``include_sentence_text=False`` keeps the sentence
+    text and tokens out of the plane (graph outputs only); the plane's
+    stage name carries the setting, so one stage root never resumes
+    across it.
 
     ``extractor`` picks the triple-extraction mechanism filling the M1
-    slot: ``"fused"`` (pair scorer, default), or any name in the
-    ``"extractor"`` registry namespace — built-ins ``"casrel"`` (the
-    M3/W2 two-stage pointer decode, operators/pointer_extraction.py)
-    and ``"usm"`` (the M6 unified ttl/ltl/tll pointer-algebra decode,
-    operators/usm.py; both pinned to P/R >= 0.95 agreement by tests),
-    or a user mechanism registered with
-    ``@rex_spark.registry.register("extractor")`` (the rex registry /
-    --include-package extension surface).  Registered paths always run
-    the composable stages (their decoders are not part of the fused
-    plane kernel).
+    slot: ``"fused"`` (pair scorer inside the plane, default), or any
+    name in the ``"extractor"`` registry namespace — built-ins
+    ``"casrel"`` (the M3/W2 two-stage pointer decode,
+    operators/pointer_extraction.py) and ``"usm"`` (the M6 unified
+    ttl/ltl/tll pointer-algebra decode, operators/usm.py; both pinned
+    to P/R >= 0.95 agreement by tests), or a user mechanism registered
+    with ``@rex_spark.registry.register("extractor")`` (the rex
+    registry / --include-package extension surface).  A registered
+    mechanism reads ``plane_sentences(plane)`` (its plane always
+    carries tokens) and writes its own ``triples_<name>`` stage.
 
     ``doc_filters`` (an :class:`~rex_spark.operators.docfilters.DocFilters`)
-    enables corpus-quality filtering between docs and sentences —
+    enables corpus-quality filtering inside the docs stage —
     quality-score / repetition / language cuts plus optional PII
     scrubbing, all per-row JVM expressions (the text plane stays
-    narrow).  Active filters force the composable stage path (the
-    fused plane cannot see filtered docs); per-filter drop counts ride
-    a single Observation — with a store they land via
-    ``write_metrics("doc_filters<sfx>")`` once the docs stage commits;
-    the Observation itself is returned under ``"doc_filter_metrics"``
-    (None when the docs stage was resumed — read the stored metrics
-    table instead).  Filtered stage names carry the filter-config
-    digest so one stage root never resumes across filter settings.
+    narrow).  Per-filter drop counts ride a single Observation — with
+    a store they land via ``write_metrics("doc_filters<sfx>")`` once
+    the docs stage commits; the Observation itself is returned under
+    ``"doc_filter_metrics"`` (None when the docs stage was resumed —
+    read the stored metrics table instead).  Filtered stage names
+    carry the filter-config digest so one stage root never resumes
+    across filter settings.
     """
     from pyspark import StorageLevel
 
-    from .operators.extraction import (
-        extract_plane,
-        extract_triples_fused,
-        plane_mentions,
-        plane_sentences,
-        plane_triples,
-    )
     from .registry import NAMESPACE_REGISTRY
 
     if extractor != "fused" and extractor not in NAMESPACE_REGISTRY["extractor"]:
@@ -164,88 +171,57 @@ def run_pipeline(
     filters_active = doc_filters is not None and doc_filters.active()
     # extractor-dependent stages carry the extractor in their NAME so a
     # stage root written with one mechanism never resumes into the other
-    # (extractor-independent stages — docs/sentences/mentions/surfaces/
-    # entities — stay shared and ARE reused across extractors); when
-    # doc filters are active EVERY stage additionally carries the
-    # filter digest (all downstream content depends on the kept set)
+    # (extractor-independent stages — docs/plane/surfaces/entities —
+    # stay shared and ARE reused across extractors); when doc filters
+    # are active EVERY stage additionally carries the filter digest
+    # (all downstream content depends on the kept set)
     ext_sfx = "" if extractor == "fused" else f"_{extractor}"
     fsfx = f"_fl{doc_filters.digest()}" if filters_active else ""
+    with_text = include_sentence_text or extractor != "fused"
     obs = None
-    fresh_docs = store is None or not store.is_committed(f"docs{fsfx}")
-    if filters_active:
+    if filters_active and (store is None or not store.is_committed(f"docs{fsfx}")):
         from pyspark.sql import Observation
 
-        from .operators.docfilters import apply_doc_filters
+        obs = Observation()
 
-        obs = Observation() if fresh_docs else None
+    def stage(name, fn, partition_by=None, persist=False) -> DataFrame:
+        if store is not None:
+            return store.run(name, fn, partition_by=partition_by)
+        df = fn()
+        return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
 
     def make_docs():
         d = clean_pages(pages)
         if filters_active:
+            from .operators.docfilters import apply_doc_filters
+
             d = apply_doc_filters(d, doc_filters, observation=obs)
         return d
 
-    if extractor != "fused" or filters_active:
-        _ext = (
-            extract_triples_fused
-            if extractor == "fused"
-            else NAMESPACE_REGISTRY["extractor"][extractor]
-        )
-
-        def run(name, fn, **kw):
-            return fn() if store is None else store.run(name, fn, **kw)
-
-        docs = run(f"docs{fsfx}", make_docs)
-        if store is not None and obs is not None:
-            # docs stage write was a full action over the observed
-            # branch -> counts are final; land them next to the lineage
-            store.write_metrics(f"doc_filters{fsfx}", obs.get)
-        sentences = run(f"sentences{fsfx}", lambda: segment_sentences(docs))
-        if store is None:
-            sentences = sentences.persist(StorageLevel.MEMORY_AND_DISK)
-        triples = run(f"triples{ext_sfx}{fsfx}", lambda: _ext(sentences))
-        mentions = run(f"mentions{fsfx}", lambda: detect_mentions(sentences))
-        labeled = run(
-            f"surfaces{fsfx}",
-            lambda: canonicalize_surfaces(
-                spark, mentions, driver_max_surfaces=driver_max_surfaces
-            ),
-        )
-        if store is None:
-            labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
-    elif store is None:
-        plane = extract_plane(pages, include_text=include_sentence_text).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        docs = clean_pages(pages)  # lazy; forced only if the caller asks
-        from pyspark.sql import functions as F
-
-        sentences = (
-            plane_sentences(plane)
-            if include_sentence_text
-            else plane.select(
-                "url",
-                F.timestamp_micros("warc_us").alias("warc_ts"),
-                "lang",
-                "sent_id",
-            )
-        )
+    docs = stage(f"docs{fsfx}", make_docs)
+    if store is not None and obs is not None:
+        # docs stage write was a full action over the observed
+        # branch -> counts are final; land them next to the lineage
+        store.write_metrics(f"doc_filters{fsfx}", obs.get)
+    plane = stage(
+        f"plane{'' if with_text else '_notext'}{fsfx}",
+        lambda: extract_plane(docs, include_text=with_text),
+        persist=True,
+    )
+    sentences = plane_sentences(plane)
+    mentions = plane_mentions(plane)
+    if extractor == "fused":
         triples = plane_triples(plane)
-        mentions = plane_mentions(plane)
-        labeled = canonicalize_surfaces(
-            spark, mentions, driver_max_surfaces=driver_max_surfaces
-        ).persist(StorageLevel.MEMORY_AND_DISK)
     else:
-        docs = store.run("docs", lambda: clean_pages(pages))
-        sentences = store.run("sentences", lambda: segment_sentences(docs))
-        triples = store.run("triples", lambda: extract_triples_fused(sentences))
-        mentions = store.run("mentions", lambda: detect_mentions(sentences))
-        labeled = store.run(
-            "surfaces",
-            lambda: canonicalize_surfaces(
-                spark, mentions, driver_max_surfaces=driver_max_surfaces
-            ),
-        )
+        ext = NAMESPACE_REGISTRY["extractor"][extractor]
+        triples = stage(f"triples{ext_sfx}{fsfx}", lambda: ext(sentences))
+    labeled = stage(
+        f"surfaces{fsfx}",
+        lambda: canonicalize_surfaces(
+            spark, mentions, driver_max_surfaces=driver_max_surfaces
+        ),
+        persist=True,
+    )
 
     if score_threshold is not None:
         # extra T3 cut over the kernel's own threshold (conf
@@ -253,11 +229,6 @@ def run_pipeline(
         from pyspark.sql import functions as F
 
         triples = triples.where(F.col("score") >= F.lit(score_threshold))
-
-    def stage(name: str, fn, partition_by=None) -> DataFrame:
-        if store is None:
-            return fn()
-        return store.run(name, fn, partition_by=partition_by)
 
     # entities sorted by id within files (point-lookup friendly); edges
     # partitioned by predicate — the low-cardinality column every graph

@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extraction import document_triple_set, extract_triples_fused
-from ..operators.textplane import PAGES_SCHEMA, clean_pages, segment_sentences
+from ..operators.extraction import document_triple_set, extract_plane, plane_triples
+from ..operators.textplane import PAGES_SCHEMA, clean_pages
 
 
 def stream_pages(
@@ -37,16 +37,19 @@ def stream_pages(
 
 
 def stream_warc_pages(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 16
+    spark: SparkSession,
+    path: str,
+    max_files_per_trigger: int = 16,
+    corrupt: str = "fail",
 ) -> DataFrame:
     """Streaming source over a GROWING crawl directory of raw
-    *.warc(.gz) files: binaryFile file stream -> io/warc record
-    fan-out inside the Arrow batch -> PAGES_SCHEMA rows (text/lang
-    null — a raw dump has neither; the pipeline recomputes).  New
-    crawl files landing in ``path`` become micro-batches, so the
-    same exactly-once foreachBatch pipeline that consumes the parquet
-    stream consumes the crawl as it is written."""
-    import pandas as pd
+    *.warc(.gz) files: binaryFile file stream -> the batch reader's
+    record fan-out (io/warc ``warc_records``, same ``corrupt``
+    contract) -> PAGES_SCHEMA rows (text/lang null — a raw dump has
+    neither; the pipeline recomputes).  New crawl files landing in
+    ``path`` become micro-batches, so the same exactly-once
+    foreachBatch pipeline that consumes the parquet stream consumes
+    the crawl as it is written."""
     from pyspark.sql.types import (
         BinaryType,
         LongType,
@@ -56,7 +59,7 @@ def stream_warc_pages(
         TimestampType,
     )
 
-    from ..io.warc import iter_warc
+    from ..io.warc import warc_records
 
     bin_schema = StructType(
         [
@@ -71,27 +74,12 @@ def stream_warc_pages(
         .schema(bin_schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .load(path)
-        .select("content")
     )
-
-    def expand(batches):
-        CHUNK_ROWS = 2048
-        rows = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                for url, ts, html in iter_warc(bytes(content)):
-                    rows.append((url, ts, html, None, None))
-                    if len(rows) >= CHUNK_ROWS:
-                        yield pd.DataFrame(
-                            rows, columns=[f.name for f in PAGES_SCHEMA.fields]
-                        )
-                        rows = []
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PAGES_SCHEMA.fields]
-            )
-
-    return files.mapInPandas(expand, schema=PAGES_SCHEMA)
+    return (
+        warc_records(files, corrupt)
+        .withColumn("text", F.lit(None).cast("string"))
+        .withColumn("lang", F.lit(None).cast("string"))
+    )
 
 
 def incremental_triples(
@@ -102,7 +90,8 @@ def incremental_triples(
 ):
     """pages stream -> triples appended to ``output_dir`` (parquet).
 
-    foreachBatch reuses the batch operators verbatim; the streaming
+    foreachBatch reuses the batch text plane verbatim (clean_pages ->
+    extract_plane -> plane_triples, run_pipeline's chain); the streaming
     checkpoint gives exactly-once per micro-batch, which together with
     the deterministic transforms makes the output restart-idempotent —
     the streaming analog of the StageStore resume contract.
@@ -114,7 +103,7 @@ def incremental_triples(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         triples = document_triple_set(
-            extract_triples_fused(segment_sentences(clean_pages(batch_df)))
+            plane_triples(extract_plane(clean_pages(batch_df), include_text=False))
         )
         (
             triples.withColumn("batch_id", F.lit(batch_id))
@@ -392,23 +381,11 @@ def running_surface_state(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..kernels.extractor import extract_mentions
-
-    sentences = segment_sentences(clean_pages(pages_stream))
-
-    def mention_batches(batches):
-        for pdf in batches:
-            rows = []
-            for url, wts, tokens in zip(
-                pdf["url"], pdf["warc_ts"], pdf["tokens"]
-            ):
-                us = int(pd.Timestamp(wts).value // 1000)
-                for surface, _et, _s, _e in extract_mentions(list(tokens)):
-                    rows.append((surface, url, us))
-            yield pd.DataFrame(rows, columns=["surface", "url", "warc_us"])
-
-    mentions = sentences.select("url", "warc_ts", "tokens").mapInPandas(
-        mention_batches, schema="surface string, url string, warc_us long"
+    # the batch text plane; only the mention surfaces leave it
+    mentions = extract_plane(clean_pages(pages_stream), include_text=False).select(
+        F.explode("m_surface").alias("surface"),
+        "url",
+        F.unix_micros("warc_ts").alias("warc_us"),
     )
 
     out_schema = (

@@ -5,8 +5,9 @@
 2. the distributed triple set matches the in-process reference
    extractor at P/R >= 0.95 per rex/metrics/triple.py facets (exact
    match expected: same frozen kernels);
-3. the composable stage path (mentions -> pairs -> score) and the
-   fused path emit identical triple sets;
+3. the composable pair operators (mentions -> pairs -> score) and the
+   plane emit identical triple sets, and the plane equals the scalar
+   kernels run in process;
 4. planted facts are recovered at the canonical-graph level, and
    surface variants merge (a~b, b~c => one component);
 5. distributed faceted PRF1 agrees with the in-process kernel.
@@ -21,10 +22,12 @@ from rex_spark.kernels.synth import make_pages
 from rex_spark.kernels.textnorm import html_to_text
 from rex_spark.operators.extraction import (
     candidate_pairs,
-    detect_mentions,
-    document_triple_set,
+    extract_plane,
+    plane_sentences,
+    plane_triples,
     score_pairs,
 )
+from rex_spark.operators.textplane import clean_pages
 from rex_spark.operators.metrics import triple_prf1_dict
 from rex_spark.pipeline import build_pages_df, run_pipeline
 
@@ -70,8 +73,7 @@ def test_triples_match_reference_extractor(corpus):
 
 def test_stage_path_equals_fused_path(spark, corpus):
     _, result, _, _ = corpus
-    mentions = detect_mentions(result["sentences"])
-    pairs = candidate_pairs(mentions)
+    pairs = candidate_pairs(result["mentions"])
     staged = score_pairs(pairs, result["sentences"])
     staged_set = {
         (r["url"], r["sent_id"], r["subj"], r["pred"], r["obj"], r["score"])
@@ -173,37 +175,46 @@ def test_distributed_synthesis_identical(spark):
     assert a == b
 
 
-def test_fused_plane_matches_composable_stages(spark):
-    """extract_plane (one Arrow crossing) must emit exactly the same
-    sentences, mentions and triples as the composable stage chain."""
-    from rex_spark.operators.extraction import (
-        extract_plane,
-        extract_triples_fused,
-        plane_mentions,
-        plane_sentences,
-        plane_triples,
-    )
-    from rex_spark.operators.textplane import clean_pages, segment_sentences
+def test_plane_matches_scalar_kernels(spark):
+    """extract_plane (one Arrow crossing) emits exactly the sentences,
+    tokens, mentions and triples of the scalar kernels (sent_seg /
+    tokenize / extract_mentions / extract_sentence) run in process on
+    the same pages."""
+    from collections import Counter
+
+    import numpy as np
+
+    from rex_spark.kernels.extractor import extract_mentions, extract_sentence
+    from rex_spark.kernels.textnorm import sent_seg, tokenize
+    from rex_spark.operators.extraction import plane_mentions
 
     pages = build_pages_df(spark, 80, seed=42)
-    plane = extract_plane(pages)
-    sents_ref = segment_sentences(clean_pages(pages))
+    ts_of = {r["url"]: r["warc_ts"] for r in pages.select("url", "warc_ts").collect()}
+    raw_pages, _ = make_pages(80, seed=42)
+    want_s, want_m, want_t = Counter(), Counter(), Counter()
+    for p in raw_pages:
+        url, ts, lang = p["url"], ts_of[p["url"]], p["lang"]
+        seg_lang = "zh" if lang == "zh" else "en"
+        for sid, sent in enumerate(sent_seg(html_to_text(p["html"]), lang=seg_lang)):
+            toks = tokenize(sent, lang=seg_lang)
+            want_s[(url, ts, lang, sid, sent, tuple(toks))] += 1
+            for surface, etype, s, e in extract_mentions(toks):
+                want_m[(url, sid, etype, s, e, surface)] += 1
+            for t in extract_sentence(toks, max_pairs=400):
+                # the plane ships scores as float32
+                want_t[(url, ts, sid, *t[:7], float(np.float32(t[7])))] += 1
+    assert want_t, "scalar kernels produced no triples"
 
-    def rows(df, arr_cols=("tokens",)):
-        out = set()
-        for r in df.collect():
-            d = r.asDict()
-            for c in arr_cols:
-                if c in d:
-                    d[c] = tuple(d[c])
-            out.add(tuple(sorted(d.items())))
-        return out
-
-    assert rows(plane_sentences(plane)) == rows(sents_ref)
-    assert rows(plane_mentions(plane), ()) == rows(detect_mentions(sents_ref), ())
-    assert rows(plane_triples(plane), ()) == rows(
-        extract_triples_fused(sents_ref), ()
+    plane = extract_plane(clean_pages(pages)).cache()
+    got_s = Counter(
+        (*r[:5], tuple(r["tokens"])) for r in plane_sentences(plane).collect()
     )
+    got_m = Counter(tuple(r) for r in plane_mentions(plane).collect())
+    got_t = Counter(tuple(r) for r in plane_triples(plane).collect())
+    plane.unpersist()
+    assert got_s == want_s
+    assert got_m == want_m
+    assert got_t == want_t
 
 
 def test_run_pipeline_casrel_extractor(spark):
@@ -211,7 +222,6 @@ def test_run_pipeline_casrel_extractor(spark):
     the pipeline's triple set equals a direct casrel_extract, and the
     graph plane still materializes."""
     from rex_spark.operators.pointer_extraction import casrel_extract
-    from rex_spark.operators.textplane import clean_pages, segment_sentences
 
     pages = build_pages_df(spark, 60, seed=42)
     r = run_pipeline(spark, pages, store=None, extractor="casrel")
@@ -219,7 +229,7 @@ def test_run_pipeline_casrel_extractor(spark):
     got = {tuple(x) for x in r["triple_set"].select(*key).collect()}
     want = {
         tuple(x)
-        for x in casrel_extract(segment_sentences(clean_pages(pages)))
+        for x in casrel_extract(plane_sentences(extract_plane(clean_pages(pages))))
         .select(*key)
         .distinct()
         .collect()
@@ -236,14 +246,12 @@ def test_casrel_pointer_path_agrees_with_pair_scorer(spark):
     pair-scoring extractor at P/R >= 0.95 on document triple sets
     (exact equality is impossible: pointer vectors cannot express
     nested mentions with distinct ends)."""
-    from rex_spark.operators.extraction import extract_triples_fused
     from rex_spark.operators.pointer_extraction import casrel_extract
-    from rex_spark.operators.textplane import clean_pages, segment_sentences
 
-    sents = segment_sentences(clean_pages(build_pages_df(spark, 120, seed=42)))
+    plane = extract_plane(clean_pages(build_pages_df(spark, 120, seed=42)))
     key = ["url", "subj", "pred", "obj"]
-    a = extract_triples_fused(sents).select(*key).distinct()
-    b = casrel_extract(sents).select(*key).distinct()
+    a = plane_triples(plane).select(*key).distinct()
+    b = casrel_extract(plane_sentences(plane)).select(*key).distinct()
     scores = triple_prf1_dict(b, a)["triple"]
     assert scores["p"] >= 0.95 and scores["r"] >= 0.95, scores
 

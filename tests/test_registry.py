@@ -46,24 +46,26 @@ def test_get_unknown_raises_with_known_names():
 
 def test_custom_extractor_through_pipeline(spark):
     """A user-registered mechanism runs through run_pipeline exactly
-    like the built-ins (same composable stages, graph plane intact)."""
+    like the built-ins (reads plane_sentences, graph plane intact).
+    The plugin wraps the USM decode, whose triple set equals the
+    pair scorer's on this corpus."""
 
-    @register("extractor", name="fused_again")
-    def fused_again(sentences):
-        from rex_spark.operators.extraction import extract_triples_fused
+    @register("extractor", name="usm_again")
+    def usm_again(sentences):
+        from rex_spark.operators.usm import usm_extract_scored
 
-        return extract_triples_fused(sentences)
+        return usm_extract_scored(sentences)
 
     try:
         pages = build_pages_df(spark, 40, seed=42)
-        r = run_pipeline(spark, pages, store=None, extractor="fused_again")
+        r = run_pipeline(spark, pages, store=None, extractor="usm_again")
         base = run_pipeline(spark, pages, store=None)
         key = ["url", "subj", "pred", "obj"]
         got = {tuple(x) for x in r["triple_set"].select(*key).collect()}
         want = {tuple(x) for x in base["triple_set"].select(*key).collect()}
         assert got == want and got
     finally:
-        NAMESPACE_REGISTRY["extractor"].pop("fused_again", None)
+        NAMESPACE_REGISTRY["extractor"].pop("usm_again", None)
 
     with pytest.raises(ValueError, match="unknown extractor"):
-        run_pipeline(spark, pages, store=None, extractor="fused_again")
+        run_pipeline(spark, pages, store=None, extractor="usm_again")

@@ -51,8 +51,7 @@ def _triple_set(result):
     }
 
 
-STAGES = ["docs", "edges", "entities", "mentions",
-          "sentences", "surfaces", "triples"]
+STAGES = ["docs", "edges", "entities", "plane", "surfaces"]
 
 
 def test_resume_after_partial_failure(spark, pages, store_factory):
@@ -63,12 +62,13 @@ def test_resume_after_partial_failure(spark, pages, store_factory):
 
     # simulate a crash mid-pipeline: later stages uncommitted (parquet:
     # marker removed; iceberg: rex.committed property unset)
-    for broken in ("triples", "mentions", "surfaces", "entities", "edges"):
+    for broken in ("plane", "surfaces", "entities", "edges"):
         store.decommit(broken)
         assert not store.is_committed(broken)
 
-    # docs/sentences stay committed: resume must NOT recompute them.
-    # Poison the upstream input to prove it: a recompute would change docs.
+    # docs stays committed: resume must NOT recompute it (the plane is
+    # recomputed FROM it).  Poison the upstream input to prove it: a
+    # recompute would change docs.
     empty_pages = pages.limit(0)
     store2 = store_factory()
     resumed = run_pipeline(spark, empty_pages, store=store2)
@@ -80,15 +80,18 @@ def test_lineage_rows_written(spark, pages, store_factory):
     store = store_factory()
     run_pipeline(spark, pages, store=store)
 
-    lineage = store.lineage("triples")
+    lineage = store.lineage("plane")
     rows = lineage.collect()
-    assert rows, "no lineage rows for triples stage"
+    assert rows, "no lineage rows for plane stage"
     cols = set(lineage.columns)
     assert {"_pid", "row_count", "url_min", "url_max",
             "warc_ts_watermark", "stage", "model_version"} <= cols
-    assert all(r["stage"] == "triples" for r in rows)
+    assert all(r["stage"] == "plane" for r in rows)
     assert all(r["model_version"] == "rule-extractor-v1" for r in rows)
-    assert sum(r["row_count"] for r in rows) == store.read("triples").count()
+    assert sum(r["row_count"] for r in rows) == store.read("plane").count()
+    # the plane carries warc_ts, so every non-empty partition has a
+    # watermark
+    assert all(r["warc_ts_watermark"] is not None for r in rows if r["row_count"])
     # docs lineage carries the warc_ts watermark
     docs_lineage = store.lineage("docs").collect()
     assert any(r["warc_ts_watermark"] is not None for r in docs_lineage)
@@ -133,7 +136,8 @@ def test_extractor_stages_do_not_cross_resume(spark, pages, tmp_path):
     root = str(tmp_path / "stages_x")
     r_fused = run_pipeline(spark, pages, store=StageStore(spark, root))
     n_fused = r_fused["triple_set"].count()
-    assert os.path.exists(os.path.join(root, "triples", "_STAGE_COMMITTED"))
+    assert os.path.exists(os.path.join(root, "plane", "_STAGE_COMMITTED"))
+    assert not os.path.exists(os.path.join(root, "triples"))  # a projection
 
     r_cas = run_pipeline(
         spark, pages, store=StageStore(spark, root), extractor="casrel"
@@ -146,15 +150,37 @@ def test_extractor_stages_do_not_cross_resume(spark, pages, tmp_path):
     assert os.path.exists(os.path.join(root, "edges_casrel", "_STAGE_COMMITTED"))
     key = ["url", "subj", "pred", "obj"]
     cas_set = {tuple(r) for r in r_cas["triple_set"].select(*key).collect()}
+    from rex_spark.operators.extraction import extract_plane, plane_sentences
     from rex_spark.operators.pointer_extraction import casrel_extract
-    from rex_spark.operators.textplane import clean_pages, segment_sentences
+    from rex_spark.operators.textplane import clean_pages
 
     want = {
         tuple(r)
-        for r in casrel_extract(segment_sentences(clean_pages(pages)))
+        for r in casrel_extract(plane_sentences(extract_plane(clean_pages(pages))))
         .select(*key)
         .distinct()
         .collect()
     }
     assert cas_set == want
     assert n_fused > 0 and n_cas > 0
+
+
+def test_textless_plane_never_serves_sentence_text(spark, pages, tmp_path):
+    """A root written with include_sentence_text=False holds a plane
+    without sentence text or tokens; a later run on the same root that
+    asks for the text must compute its own plane, not resume the
+    textless one."""
+    root = str(tmp_path / "stages_t")
+    r0 = run_pipeline(
+        spark, pages, store=StageStore(spark, root), include_sentence_text=False
+    )
+    assert {"sent", "tokens"}.isdisjoint(r0["sentences"].columns)
+    assert os.path.exists(os.path.join(root, "plane_notext", "_STAGE_COMMITTED"))
+    assert not os.path.exists(os.path.join(root, "plane"))
+
+    r1 = run_pipeline(spark, pages, store=StageStore(spark, root))
+    assert os.path.exists(os.path.join(root, "plane", "_STAGE_COMMITTED"))
+    sents = r1["sentences"].collect()
+    assert len(sents) == r0["sentences"].count() > 0
+    assert all(r["sent"] and r["tokens"] for r in sents)
+    assert _triple_set(r1) == _triple_set(r0)

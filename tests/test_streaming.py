@@ -7,9 +7,8 @@ import os
 
 import pytest
 
-from rex_spark.operators.extraction import document_triple_set, extract_triples_fused
-from rex_spark.operators.textplane import clean_pages, segment_sentences
-from rex_spark.pipeline import build_pages_df
+from rex_spark.operators.textplane import clean_pages
+from rex_spark.pipeline import build_pages_df, run_pipeline
 from rex_spark.streaming import (
     incremental_triples,
     running_surface_state,
@@ -54,11 +53,9 @@ def test_stream_matches_batch(spark, pages_dir, tmp_path):
     streamed = spark.read.parquet(out)
     assert streamed.select("batch_id").distinct().count() >= 2  # micro-batched
 
-    batch = document_triple_set(
-        extract_triples_fused(
-            segment_sentences(clean_pages(build_pages_df(spark, N_PAGES, seed=42)))
-        )
-    )
+    batch = run_pipeline(spark, build_pages_df(spark, N_PAGES, seed=42))[
+        "triple_set"
+    ]
     cols = ["url", "subj", "pred", "obj"]
     s = {tuple(r) for r in streamed.select(*cols).collect()}
     b = {tuple(r) for r in batch.select(*cols).collect()}
@@ -261,8 +258,6 @@ def test_running_surface_state(spark, pages_dir, tmp_path):
     the final state)."""
     from pyspark.sql import functions as F
 
-    from rex_spark.operators.extraction import detect_mentions
-
     q = (
         running_surface_state(
             stream_pages(spark, pages_dir, max_files_per_trigger=1)
@@ -287,9 +282,9 @@ def test_running_surface_state(spark, pages_dir, tmp_path):
     }
     assert got, "stateful op emitted nothing"
 
-    batch_mentions = detect_mentions(
-        segment_sentences(clean_pages(build_pages_df(spark, N_PAGES, seed=42)))
-    )
+    batch_mentions = run_pipeline(spark, build_pages_df(spark, N_PAGES, seed=42))[
+        "mentions"
+    ]
     want = {
         r["surface"]: (r["n"], r["n_docs"])
         for r in batch_mentions.groupBy("surface")

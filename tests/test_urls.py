@@ -81,6 +81,32 @@ def test_filter_robots(spark):
     assert kept["http://a.example.com/ok"] == 1
 
 
+def test_filter_robots_keeps_colliding_user_columns(spark):
+    """Page columns named like the filter's internals (__host,
+    robots_txt) pass through unchanged, and the decision still uses the
+    robots table's rules, not the page's robots_txt column."""
+    from rex_spark.operators.urls import filter_robots
+
+    robots = spark.createDataFrame(
+        [("a.example.com", "User-agent: *\nDisallow: /private/\n")],
+        ["host", "robots_txt"],
+    )
+    pages = spark.createDataFrame(
+        [
+            ("http://a.example.com/ok", "h1", "mine-1"),
+            ("http://a.example.com/private/x", "h2", "mine-2"),
+            ("http://c.example.com/x", "h3", "User-agent: *\nDisallow: /\n"),
+        ],
+        ["url", "__host", "robots_txt"],
+    )
+    out = filter_robots(pages, robots)
+    assert out.columns == ["url", "__host", "robots_txt"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("http://a.example.com/ok", "h1", "mine-1"),
+        ("http://c.example.com/x", "h3", "User-agent: *\nDisallow: /\n"),
+    ]
+
+
 def test_robots_kernel_matches_stdlib_semantics():
     """The operator's contract is STDLIB urllib.robotparser semantics:
     first matching rule in file order wins (NOT Google-REP

@@ -225,6 +225,40 @@ def test_read_warc_corrupt_skip_keeps_good_files(spark, tmp_path):
         read_warc(spark, str(tmp_path)).collect()  # strict default
 
 
+def test_stream_warc_pages_corrupt_contract(spark, tmp_path):
+    """Streaming shares batch's corrupt contract: a truncated .warc.gz
+    dropped into the crawl directory keeps the records before the bad
+    byte under 'skip' and fails the query under 'fail'."""
+    from rex_spark.streaming import stream_warc_pages
+
+    crawl = tmp_path / "crawl"
+    crawl.mkdir()
+    recs = _recs(20)
+    (crawl / "good.warc.gz").write_bytes(encode_warc_gz(recs[:10]))
+    bad = encode_warc_gz(recs[10:])
+    cut = len(encode_warc_gz(recs[10:15])) + 20  # inside record 15's member
+    (crawl / "bad.warc.gz").write_bytes(bad[:cut])
+
+    def drain(corrupt, name):
+        q = (
+            stream_warc_pages(spark, str(crawl), corrupt=corrupt)
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return {r["url"] for r in spark.sql(f"SELECT url FROM {name}").collect()}
+
+    got = drain("skip", "warc_skip")
+    assert got == {u for u, _, _ in recs[:15]}
+    with pytest.raises(Exception):
+        drain("fail", "warc_fail")
+    with pytest.raises(ValueError):
+        stream_warc_pages(spark, str(crawl), corrupt="ignore")
+
+
 def test_warc_negative_content_length_is_corrupt_not_infinite():
     """A one-byte corruption producing a negative Content-Length must
     raise ValueError, not loop forever yielding the same record."""

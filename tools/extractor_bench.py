@@ -1,9 +1,10 @@
 """Wall-clock comparison of the three M-slot extraction mechanisms.
 
 Same synthetic corpus, same downstream contract (distinct document
-triple set), three mechanisms: the fused pair scorer (one mapInArrow
-plane), the CasRel two-stage pointer decode, and the USM unified
-pointer-algebra decode (both composable-stage mapInPandas paths).
+triple set), three mechanisms: the fused pair scorer (its triples come
+out of the mapInArrow plane itself), the CasRel two-stage pointer
+decode, and the USM unified pointer-algebra decode (both one more
+mapInPandas crossing over the plane's sentences).
 Median of SPARK_GRAFT_BENCH_RUNS (default 3) timed runs after a warm
 run, caches cleared between runs.
 
@@ -97,15 +98,10 @@ def main() -> None:
             "| extractor | wall (s) | all runs (s) | distinct triples | pages/s |\n"
             "|---|---|---|---|---|\n"
             f"{rows}\n\n"
-            "Counting ONLY the triple set, the three mechanisms land "
-            "within VM noise of each other: the composable pointer paths "
-            "(casrel/usm) run segment + extract as separate crossings but "
-            "skip materializing the mention/sentence arrays the fused "
-            "plane always carries, so neither shape dominates for a "
-            "single output.  The fused plane wins when the full pipeline "
-            "consumes several outputs (sentences + mentions + triples "
-            "from ONE crossing — the kg_pipeline bench shape); all three "
-            "are shuffle-free to triple emission.  "
+            "All three run the same docs -> plane chain: the fused pair "
+            "scorer's triples come out of the plane itself, while casrel "
+            "and usm add one decode crossing over the plane's sentences; "
+            "all three are shuffle-free to triple emission.  "
             + (
                 "Set agreement this run: the distinct triple sets are "
                 "IDENTICAL (measured symmetric difference vs fused = 0 "

@@ -131,13 +131,14 @@ def main() -> None:
     # batch parity on the identical full corpus
     from rex_spark.operators.extraction import (
         document_triple_set,
-        extract_triples_fused,
+        extract_plane,
+        plane_triples,
     )
-    from rex_spark.operators.textplane import clean_pages, segment_sentences
+    from rex_spark.operators.textplane import clean_pages
 
     all_pages = build_pages_df_distributed(spark, per_wave * n_waves, seed=42)
     batch = document_triple_set(
-        extract_triples_fused(segment_sentences(clean_pages(all_pages)))
+        plane_triples(extract_plane(clean_pages(all_pages), include_text=False))
     )
     key = ["url", "subj", "pred", "obj"]
     streamed = spark.read.parquet(output_dir).select(*key).distinct()
