@@ -20,10 +20,11 @@ Pipeline:
                           per-iteration localCheckpoint to cut lineage
                           and AQE skew-join handling; converges in
                           O(log n) rounds even on hub-entity chains.
-4. ``build_entities_edges``  canonical entity table (component ->
-                          surfaces, canonical = most frequent surface)
-                          and edge table aggregated to canonical ids
-                          with support counts, salted-repartition ready.
+4. ``entities_from_labeled`` / ``edges_from_labeled``  canonical
+                          entity table (component -> surfaces,
+                          canonical = most frequent surface) and edge
+                          table aggregated to canonical ids with
+                          support counts, salted-repartition ready.
 
 Scale notes: LSH band join is the only quadratic-risk step; banding
 keys bound bucket sizes and a bucket-size cap drops degenerate buckets
@@ -597,16 +598,3 @@ def edges_from_labeled(
         )
     return t.groupBy("src", "pred", "dst").agg(F.count(F.lit(1)).alias("support"))
 
-
-def build_entities_edges(
-    spark,
-    mentions: DataFrame,
-    triples: DataFrame,
-    salt_partitions: int = 0,
-) -> Tuple[DataFrame, DataFrame]:
-    """Convenience wrapper: canonicalize once, materialize both tables."""
-    labeled = canonicalize_surfaces(spark, mentions)
-    return (
-        entities_from_labeled(labeled),
-        edges_from_labeled(labeled, triples, salt_partitions=salt_partitions),
-    )

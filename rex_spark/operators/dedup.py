@@ -45,6 +45,7 @@ from ..kernels.hashing import (
     simhash64,
 )
 from ..kernels.textnorm import ngrams
+from .similarity import _cosine, _normed
 
 
 def _parallelize(df: DataFrame) -> DataFrame:
@@ -354,36 +355,20 @@ def embedding_neardup_pairs(
     path is LSH bucketing in similarity.py).  Dot products stay
     JVM-side via zip_with + aggregate — no Python in the O(n^2) loop.
     """
-    e = embeddings.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-        F.sqrt(
-            F.aggregate(
-                F.col("embedding").cast("array<double>"),
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            )
-        ).alias("norm"),
-    )
+    e = _normed(embeddings)
     left = e
     if max_query_id is not None:
         left = e.where(F.col("vec_id") < max_query_id)
-    pairs = (
+    return (
         left.alias("x")
         .join(e.alias("y"), F.col("x.vec_id") < F.col("y.vec_id"))
         .select(
             F.col("x.vec_id").alias("a"),
             F.col("y.vec_id").alias("b"),
-            (
-                F.aggregate(
-                    F.zip_with("x.v", "y.v", lambda p, q: p * q),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / (F.col("x.norm") * F.col("y.norm"))
+            _cosine(
+                F.col("x.v"), F.col("y.v"), F.col("x.norm"), F.col("y.norm")
             ).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
         .select("a", "b", F.round("cosine", 6).alias("cosine"))
     )
-    return pairs

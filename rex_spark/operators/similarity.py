@@ -7,6 +7,10 @@
                         meet vectors sharing a hyperplane-sign bucket
                         (multi-probe over several tables).  The 100 TB
                         path: cost O(n x tables) instead of O(n x q).
+- ``bucketed``          the one bucketing step under LSH ANN and
+                        near-dup: an Arrow-batched matmul UDF computes
+                        every table's bucket, a JVM posexplode fans
+                        rows out per table.
 
 Hyperplanes are derived deterministically from splitmix64 (seeded), so
 results are rerun-stable — no rand() in the plan.
@@ -15,9 +19,11 @@ results are rerun-stable — no rand() in the plan.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.functions import pandas_udf
 
 from ..kernels.hashing import splitmix64
 
@@ -37,6 +43,19 @@ def _cosine(vx, vy, nx, ny):
     return F.aggregate(
         F.zip_with(vx, vy, lambda p, q: p * q), F.lit(0.0), lambda a, x: a + x
     ) / (nx * ny)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine) -> the k best per query, rank
+    1..k by cosine desc with a deterministic neighbor_id tie-break."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
 
 
 def cosine_topk(
@@ -63,14 +82,7 @@ def cosine_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 1227) -> np.ndarray:
@@ -84,143 +96,37 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 1227) -> np.ndarray:
     return vals.reshape(n_planes, dim)
 
 
-# Measured crossover for impl="auto" (tools/bucketed_bench.py; full
-# grid + reasoning in BASELINE.md "LSH bucketing impl guard"): the
-# literal plan pays a FIXED driver/plan-build cost of ~0.7-1 ms per
-# inlined weight (py4j literal construction + codegen) but its
-# executor per-row cost is tiny, while the Arrow path is the reverse
-# (near-zero fixed, per-row cost that grows with tables x dim — the
-# fan-out ships each vector n_tables times through Arrow).  Measured
-# break-even: ~132k rows at the default 4x16x64 cell (4,096 weights)
-# but ~21k rows at 4x64x256 (65,536 weights) — Arrow's per-row cost
-# grows FASTER than linearly in the weight count, so the threshold
-# scales inversely with weights.  The inverse-linear model below
-# under-estimates the big-cell crossover (6k vs measured 21k), i.e.
-# errs toward literal — the bounded mistake (cost capped by the fixed
-# plan build) and the right bias for an engine designed for scale.
-BUCKETED_ARROW_MAX_ROWS = 100_000  # at the default 4,096-weight cell
-
-
-def _arrow_max_rows(n_planes: int, n_tables: int, dim: int) -> int:
-    weights = n_planes * n_tables * dim
-    return max(1_000, int(BUCKETED_ARROW_MAX_ROWS * 4_096 / weights))
-
-
 def bucketed(
-    e: DataFrame,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    dim: int = 64,
-    impl: str = "auto",
-    n_rows_hint: int | None = None,
+    e: DataFrame, n_planes: int = 4, n_tables: int = 16, dim: int = 64
 ) -> DataFrame:
     """_normed() rows -> one row per (vec_id, table_id, bucket):
     sign-pattern bucket in each of ``n_tables`` hyperplane tables.
 
-    ``impl="literal"`` evaluates the dot products JVM-side with the
-    plane weights inlined as plan literals (whole-stage codegen, zero
-    Python); ``"arrow"`` computes all buckets in one vectorized numpy
-    matmul inside mapInPandas (plan size O(1) in dim x tables).
-    ``"auto"``: arrow only when ``n_rows_hint`` says the input is
-    small enough (< the weight-scaled ``_arrow_max_rows``) for the
-    literal plan's fixed build cost to dominate; literal otherwise —
-    including when no hint is given, because this engine designs for
-    the 100 TB case and the measured executor throughput of the
-    literal plan wins 7-30x there (BASELINE.md grid; the r3 "codegen
-    bloat" suspicion measured REAL for plan build — 205 s at 262k
-    weights — but amortized away at scale).  Both implementations produce identical
-    buckets on every measured input (same hyperplanes, float64 dots;
-    pinned by tests/test_similarity_bucketing.py) — a sign flip would
-    need a dot product within float-summation-order epsilon of
-    exactly 0.
+    Two steps.  A scalar pandas UDF reads only ``v`` and returns the
+    row's ``n_tables`` bucket ints from one
+    ``(rows, dim) @ (dim, tables * planes)`` float64 matmul per Arrow
+    batch; ``posexplode`` then fans each row out to its
+    ``(table_id, bucket)`` rows on the JVM, so ``vec_id``/``v``/``norm``
+    never travel back through Python and the plan size stays O(1) in
+    dim x tables.  The matmul sums in BLAS order, so bucket SIGNS match
+    the serial-fold reference (``oracle_gold._bucket_rows``, pinned by
+    tests/test_oracle_gold.py) — a flip would need a dot product within
+    summation-order epsilon of exactly 0.  Timings: BASELINE.md
+    "LSH bucketing".
     """
-    if impl == "auto":
-        impl = (
-            "arrow"
-            if n_rows_hint is not None
-            and n_rows_hint < _arrow_max_rows(n_planes, n_tables, dim)
-            else "literal"
-        )
-    if impl == "arrow":
-        return _bucketed_arrow(e, n_planes, n_tables, dim)
-
-    def bucket_cols():
-        cols = []
-        for t in range(n_tables):
-            planes = _hyperplanes(dim, n_planes, seed=1227 + t)
-            bits = [
-                F.when(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("v"),
-                            F.array(*[F.lit(float(w)) for w in planes[p]]),
-                            lambda a, b: a * b,
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    >= 0,
-                    F.lit(1 << p),
-                ).otherwise(F.lit(0))
-                for p in range(n_planes)
-            ]
-            acc = bits[0]
-            for bcol in bits[1:]:
-                acc = acc + bcol
-            cols.append(acc.alias(f"bucket_{t}"))
-        return cols
-
-    tagged = e.select("vec_id", "v", "norm", *bucket_cols())
-    bucket_structs = F.array(
-        *[
-            F.struct(F.lit(t).alias("table_id"), F.col(f"bucket_{t}").alias("bucket"))
-            for t in range(n_tables)
-        ]
-    )
-    return tagged.select(
-        "vec_id", "v", "norm", F.explode(bucket_structs).alias("tb")
-    ).select("vec_id", "v", "norm", "tb.table_id", "tb.bucket")
-
-
-def _bucketed_arrow(
-    e: DataFrame, n_planes: int, n_tables: int, dim: int
-) -> DataFrame:
-    """Arrow twin of the literal bucketing: one (tables*planes, dim)
-    float64 matmul per batch, signs packed to bucket ints, fan-out done
-    row-wise in pandas.  Same _hyperplanes seeds, so buckets match the
-    literal plan."""
-    import pandas as pd
-
-    planes = np.stack(
+    weights = np.concatenate(
         [_hyperplanes(dim, n_planes, seed=1227 + t) for t in range(n_tables)]
-    )  # (n_tables, n_planes, dim)
-    weights = planes.reshape(n_tables * n_planes, dim)
-    powers = (1 << np.arange(n_planes)).astype(np.int64)
+    ).T  # (dim, tables * planes), table-major columns
+    powers = 1 << np.arange(n_planes, dtype=np.int32)
 
-    def bucket_batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
-            dots = vecs @ weights.T  # (rows, tables*planes)
-            bits = (dots >= 0).reshape(len(pdf), n_tables, n_planes)
-            buckets = (bits * powers).sum(axis=2).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy().repeat(n_tables),
-                    "v": [v for v in pdf["v"] for _ in range(n_tables)],
-                    "norm": pdf["norm"].to_numpy().repeat(n_tables),
-                    "table_id": np.tile(
-                        np.arange(n_tables, dtype=np.int32), len(pdf)
-                    ),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
+    @pandas_udf("array<int>")
+    def buckets(v: pd.Series) -> pd.Series:
+        bits = (np.vstack(v.to_numpy()) @ weights) >= 0
+        return pd.Series(list(bits.reshape(len(v), n_tables, n_planes) @ powers))
 
-    return e.mapInPandas(
-        bucket_batches,
-        schema="vec_id long, v array<double>, norm double, "
-        "table_id int, bucket int",
+    return e.select(
+        "vec_id", "v", "norm",
+        F.posexplode(buckets("v")).alias("table_id", "bucket"),
     )
 
 
@@ -266,12 +172,7 @@ def lsh_ann_topk(
             _cosine(F.col("qv"), F.col("v"), F.col("qnorm"), F.col("norm")), 6
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def _hash_sample(embeddings: DataFrame, n: int) -> list:
@@ -361,8 +262,6 @@ def ivf_topk(
     verifies and ranks JVM-side.  The gold replica orders by the same
     md5 hex (rex_spark/oracle_gold.py ensure_ivf_gold).
     """
-    import pandas as pd
-
     sample = _hash_sample(embeddings, train_sample)
     centroids = ivf_fit(
         [r["embedding"] for r in sample], n_centroids=n_centroids, seed=seed
@@ -420,12 +319,7 @@ def ivf_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 # Measured recall/cost frontier for lsh_ann_topk, from

@@ -301,10 +301,12 @@ def ensure_dedup_gold(sf_dir: str, n: int = 3) -> Dict[str, str]:
 
 
 def _bucket_rows(vectors, n_planes: int, n_tables: int, dim: int):
-    """Sign-bucket assignment replicating similarity.py's JVM fold
-    bit-exactly: per-element double products, then a strictly serial
-    left-fold sum (np.cumsum is sequential), matching Spark's
-    ``aggregate`` over zip_with."""
+    """Sign-bucket assignment, the serial-fold reference for
+    similarity.bucketed: per-element double products, then a strictly
+    serial left-fold sum (np.cumsum is sequential).  Spark's bucketed
+    sums in BLAS matmul order, so the two match on sign decisions
+    (pinned on real embeddings by tests/test_oracle_gold.py), not on
+    bit-exact sums."""
     import numpy as np
 
     from .operators.similarity import _hyperplanes

@@ -3,6 +3,8 @@ the in-process replicas it uses must equal the distributed operators
 bit-for-bit, otherwise the driver's DuckDB comparison certifies nothing.
 """
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -36,30 +38,45 @@ def test_normalize_surface_py_matches_spark(spark):
 
 
 def test_bucket_rows_match_spark_bucketed(spark):
-    """_bucket_rows (serial-fold numpy replica) must reproduce the JVM
-    fold's sign decisions exactly on real embedding data."""
-    from rex_spark.operators.similarity import _normed, bucketed
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    rows = (
-        bucketed(_normed(emb), n_planes=4, n_tables=16, dim=64)
-        .select("vec_id", "table_id", "bucket")
-        .collect()
-    )
-    spark_buckets = {(r["vec_id"], r["table_id"]): r["bucket"] for r in rows}
-
+    """_bucket_rows (serial-fold numpy replica, the gold side) and the
+    Spark matmul UDF must make the same sign decisions on real
+    embedding data: the default cell on two scale factors, plus a
+    non-square planes x tables cell so a table/plane axis swap in the
+    UDF's reshape cannot pass."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(f"{SF_SMALL}/embeddings.parquet", columns=["vec_id", "embedding"])
-    vec_ids = t.column("vec_id").to_pylist()
-    embs = t.column("embedding").to_pylist()
-    out_t, out_b = og._bucket_rows(embs, n_planes=4, n_tables=16, dim=64)
-    i = 0
-    for vid in vec_ids:
-        for tt in range(16):
-            assert out_t[i] == tt
-            assert spark_buckets[(vid, tt)] == out_b[i], (vid, tt)
-            i += 1
+    from rex_spark.operators.similarity import _normed, bucketed
+
+    cells = [
+        (SF_SMALL, 4, 16),
+        (SF_SMALL, 6, 8),
+        (os.path.join(os.path.dirname(SF_SMALL), "sf0.1"), 4, 16),
+    ]
+    for sf, n_planes, n_tables in cells:
+        path = f"{sf}/embeddings.parquet"
+        rows = (
+            bucketed(
+                _normed(spark.read.parquet(path)),
+                n_planes=n_planes, n_tables=n_tables, dim=64,
+            )
+            .select("vec_id", "table_id", "bucket")
+            .collect()
+        )
+        spark_buckets = {(r["vec_id"], r["table_id"]): r["bucket"] for r in rows}
+
+        t = pq.read_table(path, columns=["vec_id", "embedding"])
+        vec_ids = t.column("vec_id").to_pylist()
+        out_t, out_b = og._bucket_rows(
+            t.column("embedding").to_pylist(),
+            n_planes=n_planes, n_tables=n_tables, dim=64,
+        )
+        assert len(spark_buckets) == len(rows) == len(vec_ids) * n_tables
+        i = 0
+        for vid in vec_ids:
+            for tt in range(n_tables):
+                assert out_t[i] == tt
+                assert spark_buckets[(vid, tt)] == out_b[i], (sf, n_planes, vid, tt)
+                i += 1
 
 
 def test_embedding_neardup_lsh_matches_brute_on_planted(spark):

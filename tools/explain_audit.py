@@ -95,7 +95,8 @@ def main() -> None:
         "joins for dimension lookups, two-phase (`partial` ->",
         "`finalmerge`) hash aggregates, and wide `WholeStageCodegen`",
         "spans around the relational operators.  Python appears only at",
-        "explicit `MapInPandas`/`FlatMapGroupsInPandas` nodes.",
+        "explicit `MapInPandas`/`FlatMapGroupsInPandas` nodes and at",
+        "`ArrowEvalPython` nodes (scalar pandas UDFs).",
         "",
         "| query | scans pruned | broadcast join | partial agg | codegen | scans |",
         "|---|---|---|---|---|---|",
