@@ -75,6 +75,41 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def swap_rewrite(
+    spark: SparkSession,
+    path: str,
+    cluster: Callable[[DataFrame], DataFrame],
+    keep: tuple = (),
+) -> int:
+    """Rewrite the parquet directory ``path`` as ``cluster(df)`` through
+    a verified sibling-directory swap; returns the row count.
+
+    The rewrite lands in ``path.compacting`` and must hold exactly the
+    rows of ``path``.  The files named in ``keep`` (a commit marker) are
+    copied into it, and only then do two renames promote it
+    (``path`` -> ``path.pre-compact``, ``path.compacting`` -> ``path``)
+    before the old copy is deleted.  A crash therefore leaves the old
+    table whole, or the new one whole with its kept files;
+    ``streaming.incremental.recover_compaction`` rolls the near-dup
+    state out of the window between the renames."""
+    n_rows = spark.read.parquet(path).count()
+    tmp = path + ".compacting"
+    shutil.rmtree(tmp, ignore_errors=True)
+    cluster(spark.read.parquet(path)).write.mode("overwrite").parquet(tmp)
+    if spark.read.parquet(tmp).count() != n_rows:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise RuntimeError(f"compaction row-count mismatch for {path}")
+    for name in keep:
+        if os.path.exists(os.path.join(path, name)):
+            shutil.copy(os.path.join(path, name), os.path.join(tmp, name))
+    old = path + ".pre-compact"
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old)
+    return n_rows
+
+
 class ParquetStageBackend:
     """Directory-per-stage parquet layout with a commit-marker file."""
 
@@ -123,34 +158,16 @@ class ParquetStageBackend:
         return self.spark.read.parquet(self._side_dir(kind, name))
 
     def compact(self, name: str, partitions: int, keys: list[str]) -> int:
-        """Rewrite the stage into ``partitions`` key-clustered files —
-        verified sibling-directory swap (same recoverable protocol as
-        streaming.incremental.compact_neardup_state), marker preserved."""
-        path = self._dir(name)
-        df = self.spark.read.parquet(path)
-        n_rows = df.count()
-        tmp = path + ".compacting"
-        shutil.rmtree(tmp, ignore_errors=True)
-        clustered = (
-            df.repartition(partitions, *keys).sortWithinPartitions(*keys)
-            if keys
-            else df.repartition(partitions)
-        )
-        clustered.write.mode("overwrite").parquet(tmp)
-        if self.spark.read.parquet(tmp).count() != n_rows:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(f"compaction row-count mismatch for {name}")
-        committed = self.is_committed(name)
-        old = path + ".pre-compact"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        if committed:
-            marker_src = os.path.join(old, _MARKER)
-            if os.path.exists(marker_src):
-                shutil.copy(marker_src, os.path.join(path, _MARKER))
-        shutil.rmtree(old)
-        return n_rows
+        """Rewrite the stage into ``partitions`` key-clustered files via
+        ``swap_rewrite``; the commit marker is copied into the rewrite
+        before the swap, so a committed stage stays committed."""
+
+        def cluster(df: DataFrame) -> DataFrame:
+            if keys:
+                return df.repartition(partitions, *keys).sortWithinPartitions(*keys)
+            return df.repartition(partitions)
+
+        return swap_rewrite(self.spark, self._dir(name), cluster, keep=(_MARKER,))
 
 
 class IcebergStageBackend:

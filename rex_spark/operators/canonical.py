@@ -13,7 +13,8 @@ Pipeline:
                              rel2id.json-style side input;
                           c) MinHash-LSH blocking over char-3-gram
                              shingles + exact-Jaccard verification —
-                             the fuzzy path.
+                             the fuzzy path, on dedup's near-dup
+                             pieces (_band_frame, lsh_pairs).
 3. ``connected_components``  iterative large-star / small-star on an
                           edges DataFrame (Kiveris et al., "Connected
                           Components in MapReduce and Beyond"), with
@@ -34,14 +35,15 @@ deterministic.
 
 from __future__ import annotations
 
+from itertools import combinations
 from typing import Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -49,14 +51,9 @@ from pyspark.sql.types import (
 )
 
 from ..kernels import kb
-from ..kernels.hashing import (
-    band_keys,
-    band_keys_batch,
-    minhash_params,
-    minhash_signature,
-    minhash_signatures_batch,
-)
+from ..kernels.hashing import minhash_params
 from ..kernels.textnorm import char_shingles
+from .dedup import _BAND_SCHEMA, _band_frame, lsh_pairs
 
 NUM_PERM = 64
 NUM_BANDS = 16
@@ -83,15 +80,21 @@ def surface_nodes(mentions: DataFrame) -> DataFrame:
     )
 
 
+def _kb_alias_surfaces() -> Iterator[Tuple[str, str]]:
+    """(canonical, surface) for every KB alias, spelled the way the text
+    plane emits surfaces: whitespace collapsed, zh characters joined by
+    single spaces."""
+    for canonical, (_etype, surfaces) in kb.ENTITIES.items():
+        for s in surfaces:
+            yield canonical, (" ".join(s) if kb._is_zh(s) else " ".join(s.split()))
+
+
 def _alias_edges(spark, nodes: DataFrame) -> DataFrame:
     """KB alias side input: surfaces of the same canonical entity are
     linked via a broadcast join (a is the min-id surface per canonical)."""
-    rows = []
-    for canonical, (_etype, surfaces) in kb.ENTITIES.items():
-        for s in surfaces:
-            surf = " ".join(s.split()) if not kb._is_zh(s) else " ".join(s)
-            rows.append((canonical, surf))
-    alias_df = spark.createDataFrame(rows, ["canonical", "surface"])
+    alias_df = spark.createDataFrame(
+        list(_kb_alias_surfaces()), ["canonical", "surface"]
+    )
     linked = nodes.join(F.broadcast(alias_df), "surface").select(
         "canonical", "node_id"
     )
@@ -115,124 +118,63 @@ def _exact_norm_edges(nodes: DataFrame) -> DataFrame:
 
 _SHINGLE_SCHEMA = StructType(
     [
-        StructField("node_id", LongType(), False),
-        StructField("shingles", ArrayType(StringType()), False),
-    ]
-)
-
-_SIG_SCHEMA = StructType(
-    [
-        StructField("node_id", LongType(), False),
-        StructField("band_id", IntegerType(), False),
-        StructField("band_key", LongType(), False),
+        StructField("doc_id", LongType(), False),
+        StructField("sh", ArrayType(StringType()), False),
     ]
 )
 
 
 def _shingle_table(nodes: DataFrame) -> DataFrame:
-    """One Arrow pass: (node_id, sorted char-3-gram shingles of norm);
+    """One Arrow pass: (doc_id = node_id, sh = sorted char-3-gram
+    shingles of norm), the shingle shape of dedup.lsh_pairs;
     empty-shingle surfaces are dropped (they cannot LSH-link)."""
 
     def shingle_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, shs = [], []
-            for node_id, norm in zip(pdf["node_id"], pdf["norm"]):
+            for node_id, norm in zip(pdf["doc_id"], pdf["norm"]):
                 sh = sorted(set(char_shingles(norm or "", 3)))
                 if sh:
                     ids.append(node_id)
                     shs.append(sh)
-            yield pd.DataFrame({"node_id": ids, "shingles": shs})
+            yield pd.DataFrame({"doc_id": ids, "sh": shs})
 
-    return nodes.select("node_id", "norm").mapInPandas(
+    return nodes.select(F.col("node_id").alias("doc_id"), "norm").mapInPandas(
         shingle_batches, schema=_SHINGLE_SCHEMA
     )
 
 
 def _lsh_edges(nodes: DataFrame) -> DataFrame:
-    """MinHash-LSH candidates verified with exact Jaccard (J6).
+    """MinHash-LSH candidates verified with exact Jaccard (J6), on the
+    document near-dup path (dedup._band_frame, dedup.lsh_pairs) with
+    surfaces as documents.
 
-    r4 shape (soak-profiled: the edge build dominated the CC soak
-    14:1): shingling runs in ONE Arrow pass; signatures are the
-    VECTORIZED batch kernels (minhash_signatures_batch /
-    band_keys_batch — pinned equal to the scalar kernels by
-    tests/test_property_kernels.py) derived from that shingle table;
-    and the band rows entering the bucket-size and self-join shuffles
-    are NARROW (node_id, band_id, band_key) — shingle arrays are
-    joined back only for the (small) verified-candidate set, the same
-    design dedup.py measured faster than carrying them on band rows
-    (dedup.py:215-225), and the shuffle-width argument only grows at
-    web scale.
+    Shingling runs in one Arrow pass, and the band keys are derived
+    from that shingle table in a second.  The band rows entering the
+    bucket-size and self-join shuffles are narrow (doc_id, band_id,
+    band_key); shingle arrays are joined back only for the verified
+    candidate set, which is much smaller than the band rows.
     """
-    import numpy as np
-
-    params = minhash_params(NUM_PERM)
-
     from pyspark import StorageLevel
 
-    # surface-vocab-sized; persisted because the signature pass and the
-    # two verification joins all consume it within the caller's first
-    # materializing action.
+    params = minhash_params(NUM_PERM)
+    # surface-vocab-sized; persisted because the band pass and the two
+    # verification joins all consume it within the first action below.
     sh = _shingle_table(nodes).persist(StorageLevel.MEMORY_AND_DISK)
 
-    def sig_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def band_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf["node_id"].to_numpy()
-            d = len(ids)
-            sigs = minhash_signatures_batch(
-                [set(s) for s in pdf["shingles"]], params
-            )
-            keys = band_keys_batch(sigs, NUM_BANDS)
-            yield pd.DataFrame(
-                {
-                    "node_id": np.repeat(ids, NUM_BANDS),
-                    "band_id": np.tile(np.arange(NUM_BANDS, dtype=np.int32), d),
-                    # signed band-key CONVENTION (shared with
-                    # dedup.band_rows): uint64 -> int64 by
-                    # bit-reinterpretation (two's complement view), NOT
-                    # an offset shift — persisted band tables from the
-                    # two LSH surfaces must stay join-comparable
-                    "band_key": (
-                        keys.reshape(-1).view(np.int64)
-                        if d
-                        else np.array([], dtype=np.int64)
-                    ),
-                }
+            yield _band_frame(
+                pdf["doc_id"].to_numpy(),
+                [set(s) for s in pdf["sh"]],
+                params,
+                NUM_BANDS,
             )
 
-    banded = sh.mapInPandas(sig_batches, schema=_SIG_SCHEMA)
-    # cap degenerate buckets (count them instead of letting the join blow up)
-    bucket_sizes = banded.groupBy("band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("bsz")
-    )
-    banded = banded.join(
-        bucket_sizes.where(F.col("bsz") <= MAX_BUCKET), ["band_id", "band_key"]
-    )
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_id", "band_key"])
-        .where(F.col("x.node_id") < F.col("y.node_id"))
-        .select(
-            F.col("x.node_id").alias("a"), F.col("y.node_id").alias("b")
-        )
-        .dropDuplicates(["a", "b"])
-    )
-    verified = (
-        cand.join(
-            sh.select(F.col("node_id").alias("a"), F.col("shingles").alias("sh_a")),
-            "a",
-        )
-        .join(
-            sh.select(F.col("node_id").alias("b"), F.col("shingles").alias("sh_b")),
-            "b",
-        )
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("a", "b")
-    )
+    banded = sh.mapInPandas(band_batches, schema=_BAND_SCHEMA)
+    verified = lsh_pairs(
+        banded, sh, JACCARD_THRESHOLD, max_bucket=MAX_BUCKET
+    ).select("a", "b")
     # materialize eagerly (edge-set-sized, tiny next to the shingle
     # table) so the sh cache can be RELEASED here instead of leaking a
     # persisted DataFrame per canonicalize_surfaces call for the
@@ -331,10 +273,14 @@ def _driver_union_find(rows) -> list:
 # ~3 MB; the distributed loop exists for everything beyond.
 DRIVER_CC_MAX_EDGES = 200_000
 
+# Large-star/small-star rounds before the loop gives up.  Convergence
+# takes O(log n) rounds in the largest component's diameter, so a
+# graph still changing after this many is a bug, not a big input.
+CC_MAX_ROUNDS = 12
+
 
 def connected_components(
     edges: DataFrame,
-    max_iterations: int = 12,
     driver_max_edges: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> Tuple[DataFrame, int]:
@@ -363,7 +309,10 @@ def connected_components(
     loop before convergence and could yield wrong labels; with a
     64-bit hash-sum the per-round collision probability is ~2^-64,
     which we accept in exchange for halving the per-round job count
-    (an exact exceptAll check would double it back).
+    (an exact exceptAll check would double it back).  Raises
+    RuntimeError if the digest has not settled after ``CC_MAX_ROUNDS``
+    rounds: the edge set is then not yet a star forest, and its labels
+    would be wrong.
     """
     canon = (
         edges.select(
@@ -397,14 +346,17 @@ def connected_components(
     cur = _materialize(canon)
     prev_digest = _edge_digest(cur)
     iterations = 0
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ROUNDS):
         iterations += 1
-        stepped = _materialize(_small_star(_large_star(cur)))
-        digest = _edge_digest(stepped)
-        cur = stepped
+        cur = _materialize(_small_star(_large_star(cur)))
+        digest = _edge_digest(cur)
         if digest == prev_digest:
             break
         prev_digest = digest
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {CC_MAX_ROUNDS} rounds"
+        )
     # stable state is a star forest: b is the component min for every a
     membership = cur.select(
         F.col("a").alias("node_id"), F.col("b").alias("component")
@@ -421,7 +373,8 @@ def connected_components(
 
 # Surface vocabularies at or below this size canonicalize driver-side
 # (one Spark job to collect distinct surfaces, then the SAME alias /
-# exact-norm / MinHash-band / union-find algorithms in-process).  A
+# exact-norm / MinHash-band / union-find algorithms in-process; the
+# band keys come from the same dedup._band_frame).  A
 # fixed KB-bounded gazetteer stays tiny however large the corpus is;
 # an open-vocabulary web crawl blows past this and takes the
 # distributed path.  Both paths are pinned identical by
@@ -431,49 +384,48 @@ DRIVER_CANON_MAX_SURFACES = 100_000
 
 def _driver_similarity_edges(rows) -> set:
     """In-process replica of similarity_edges over collected
-    (surface, freq, node_id, norm) rows — same kernels, same banding,
-    same bucket cap, so the edge set is identical to the distributed
-    plan's."""
+    (surface, freq, node_id, norm) rows — same kernels, same banding
+    (dedup._band_frame), same bucket cap, so the edge set is identical
+    to the distributed plan's."""
     sid = {r["surface"]: r["node_id"] for r in rows}
+    # (a) KB alias table and (b) exact normalized form: each group of
+    # ids links to its min id
+    groups: dict = {}
+    for canonical, surf in _kb_alias_surfaces():
+        if surf in sid:
+            groups.setdefault(("kb", canonical), []).append(sid[surf])
+    for r in rows:
+        groups.setdefault(("norm", r["norm"]), []).append(r["node_id"])
     edges: set = set()
-    # (a) KB alias table
-    for canonical, (_etype, surfaces) in kb.ENTITIES.items():
-        ids = []
-        for s in surfaces:
-            surf = " ".join(s.split()) if not kb._is_zh(s) else " ".join(s)
-            if surf in sid:
-                ids.append(sid[surf])
-        if len(ids) > 1:
-            rep = min(ids)
-            edges.update((i, rep) for i in ids if i != rep)
-    # (b) exact normalized form
-    by_norm: dict = {}
-    for r in rows:
-        by_norm.setdefault(r["norm"], []).append(r["node_id"])
-    for ids in by_norm.values():
-        if len(ids) > 1:
-            rep = min(ids)
-            edges.update((i, rep) for i in ids if i != rep)
+    for ids in groups.values():
+        rep = min(ids)
+        edges.update((i, rep) for i in ids if i != rep)
     # (c) MinHash-LSH banding + exact-Jaccard verification
-    params = minhash_params(NUM_PERM)
     shingle_of = {}
-    buckets: dict = {}
     for r in rows:
-        sh = sorted(set(char_shingles(r["norm"] or "", 3)))
-        if not sh:
-            continue
-        shingle_of[r["node_id"]] = set(sh)
-        sig = minhash_signature(sh, params)
-        for band_id, key in enumerate(band_keys(sig, NUM_BANDS)):
-            buckets.setdefault((band_id, key), []).append(r["node_id"])
+        sh = set(char_shingles(r["norm"] or "", 3))
+        if sh:
+            shingle_of[r["node_id"]] = sh
+    banded = _band_frame(
+        np.fromiter(shingle_of, dtype=np.int64, count=len(shingle_of)),
+        list(shingle_of.values()),
+        minhash_params(NUM_PERM),
+        NUM_BANDS,
+    )
+    # bucket = run of equal (band_id, band_key) after sorting; node ids
+    # ascend inside a run, and a node has one key per band, so
+    # combinations() yields each in-bucket pair once as (a < b)
+    banded = banded.sort_values(["band_id", "band_key", "doc_id"])
+    node, bid, key = (
+        banded[c].to_numpy() for c in ("doc_id", "band_id", "band_key")
+    )
+    starts = np.flatnonzero(
+        np.r_[True, (bid[1:] != bid[:-1]) | (key[1:] != key[:-1]), True]
+    )
     cand = set()
-    for ids in buckets.values():
-        if len(ids) > MAX_BUCKET:
-            continue
-        ids = sorted(ids)
-        for i in range(len(ids)):
-            for j in range(i + 1, len(ids)):
-                cand.add((ids[i], ids[j]))
+    for lo, hi in zip(starts[:-1].tolist(), starts[1:].tolist()):
+        if 1 < hi - lo <= MAX_BUCKET:
+            cand.update(combinations(node[lo:hi].tolist(), 2))
     for a, b in cand:
         sa, sb = shingle_of[a], shingle_of[b]
         inter = len(sa & sb)

@@ -13,7 +13,10 @@ All operate on the ``documents`` table shape
 - ``minhash_lsh_pairs``    MinHash signatures + LSH banding: candidates
                            only meet inside a band bucket, verified with
                            exact Jaccard.  The 100 TB path (cost ~
-                           O(docs x bands), never all-pairs).
+                           O(docs x bands), never all-pairs).  Its
+                           pieces (_band_frame, lsh_pairs) are also the
+                           graph plane's surface linking
+                           (canonical._lsh_edges).
 - ``simhash_pairs``        64-bit SimHash, blocked by 4x16-bit chunks
                            (pigeonhole: hamming<=3 pairs share a chunk),
                            verified by exact hamming distance.
@@ -31,7 +34,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     LongType,
     StructField,
@@ -149,7 +151,7 @@ def ngram_jaccard_pairs(
     return out
 
 
-_SIG_SCHEMA = StructType(
+_BAND_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
         StructField("band_id", IntegerType(), False),
@@ -159,6 +161,36 @@ _SIG_SCHEMA = StructType(
 
 NUM_PERM = 128
 NUM_BANDS = 32
+
+
+def _band_frame(ids, shingle_sets, params, num_bands: int) -> pd.DataFrame:
+    """MinHash band keys for one batch: ``ids`` with their shingle sets
+    -> ``len(ids) * num_bands`` rows (doc_id, band_id, band_key).
+
+    The only place band keys are built, for document near-dup, surface
+    linking (canonical._lsh_edges) and their in-process replicas.
+    Band-key convention: ``band_keys_batch``'s uint64 keys are stored
+    as int64 by bit reinterpretation (the two's-complement view), not
+    by an offset shift.  The streaming near-dup state persists these
+    rows, so keys from every producer must stay join-comparable.
+    """
+    import numpy as np
+
+    ids = np.asarray(ids, dtype=np.int64)
+    sigs = minhash_signatures_batch(shingle_sets, params)
+    keys = band_keys_batch(sigs, num_bands)  # (D, bands) uint64
+    return pd.DataFrame(
+        {
+            "doc_id": np.repeat(ids, num_bands),
+            "band_id": np.tile(np.arange(num_bands, dtype=np.int32), len(ids)),
+            "band_key": keys.reshape(-1).view(np.int64),
+        }
+    )
+
+
+def _doc_shingles(text, n: int) -> set:
+    """Distinct token n-grams of lowercased, whitespace-split text."""
+    return set(ngrams(" ".join((text or "").lower().split()).split(" "), n))
 
 
 def band_rows(
@@ -171,42 +203,19 @@ def band_rows(
     the MinHash band signatures minhash_lsh_pairs blocks on, exposed
     so the incremental path (streaming/incremental.py) can maintain
     them as a persistent stage table with the batch kernels."""
-    import numpy as np
-
     params = minhash_params(num_perm)
 
-    def sig_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def band_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            doc_ids = pdf["doc_id"].to_numpy()
-            shingle_lists = []
-            for text in pdf["text"]:
-                toks = " ".join((text or "").lower().split()).split(" ")
-                shingle_lists.append(set(ngrams(toks, n)))
-            sigs = minhash_signatures_batch(shingle_lists, params)
-            keys = band_keys_batch(sigs, num_bands)  # (D, bands)
-            d = len(doc_ids)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(doc_ids, num_bands),
-                    "band_id": np.tile(
-                        np.arange(num_bands, dtype=np.int32), d
-                    ),
-                    # signed band-key CONVENTION (shared with
-                    # canonical._lsh_edges): uint64 -> int64 by
-                    # bit-reinterpretation (two's complement view), NOT
-                    # an offset shift — the incremental near-dup state
-                    # persists these rows, so any surface emitting band
-                    # keys must use this exact mapping
-                    "band_key": (
-                        keys.reshape(-1).view(np.int64)
-                        if d
-                        else np.array([], dtype=np.int64)
-                    ),
-                }
+            yield _band_frame(
+                pdf["doc_id"].to_numpy(),
+                [_doc_shingles(text, n) for text in pdf["text"]],
+                params,
+                num_bands,
             )
 
     src = _parallelize(documents.select("doc_id", "text"))
-    return src.mapInPandas(sig_batches, schema=_SIG_SCHEMA)
+    return src.mapInPandas(band_batches, schema=_BAND_SCHEMA)
 
 
 def shingle_rows(documents: DataFrame, n: int = 3) -> DataFrame:
@@ -220,12 +229,12 @@ def shingle_rows(documents: DataFrame, n: int = 3) -> DataFrame:
 
     def sh_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_ids, out_sh = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = " ".join((text or "").lower().split()).split(" ")
-                out_ids.append(doc_id)
-                out_sh.append(sorted(set(ngrams(toks, n))))
-            yield pd.DataFrame({"doc_id": out_ids, "sh": out_sh})
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].to_numpy(),
+                    "sh": [sorted(_doc_shingles(text, n)) for text in pdf["text"]],
+                }
+            )
 
     return src.mapInPandas(sh_batches, schema="doc_id long, sh array<string>")
 
@@ -248,6 +257,37 @@ def verify_jaccard_pairs(
     )
 
 
+def lsh_pairs(
+    banded: DataFrame,
+    sh: DataFrame,
+    threshold: float,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """(doc_id, band_id, band_key) band rows x (doc_id, sh) shingles ->
+    verified pairs (a, b, jaccard): every pair a < b sharing a band
+    bucket is a candidate, kept if its exact Jaccard >= threshold.
+
+    ``max_bucket`` drops buckets with more rows than that before the
+    self-join.  Such buckets are degenerate (structural shingles that
+    many short strings share), and one bucket of k rows alone yields
+    k^2 / 2 join rows.  None keeps every bucket."""
+    if max_bucket is not None:
+        sizes = banded.groupBy("band_id", "band_key").agg(
+            F.count(F.lit(1)).alias("bsz")
+        )
+        banded = banded.join(
+            sizes.where(F.col("bsz") <= max_bucket), ["band_id", "band_key"]
+        )
+    cand = (
+        banded.alias("x")
+        .join(banded.alias("y"), ["band_id", "band_key"])
+        .where(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
+        .dropDuplicates(["a", "b"])
+    )
+    return verify_jaccard_pairs(cand, sh, threshold)
+
+
 def minhash_lsh_pairs(
     documents: DataFrame,
     n: int = 3,
@@ -263,25 +303,17 @@ def minhash_lsh_pairs(
     thresholds the two agree with overwhelming probability, which the
     tests exploit.
 
-    Composed from band_rows (banding) + shingle_rows + verify_jaccard_
-    pairs (exact verify) — the same pieces the incremental streaming
-    dedup reuses.  Verify shingles ride a second Arrow pass rather
-    than the band rows: carrying shingles on band rows (one UDF pass,
-    canonical.py-style) was MEASURED SLOWER at sf0.1 (median 1.54s vs
-    1.46s, 3 runs) — the 32x-duplicated arrays widen the band
-    self-join shuffle by more than the saved scan, and at web scale
-    that shuffle amplification only grows, while this design ships
-    shingles solely for the (small) candidate set.
+    Composed from band_rows (banding), shingle_rows (verify side) and
+    lsh_pairs (self-join + exact verify), the same pieces the
+    incremental streaming dedup reuses.  Verify shingles ride their
+    own Arrow pass and are joined only to the candidate set, rather
+    than being carried on the band rows: carrying them was measured
+    slower at sf0.1 (median 1.54 s vs 1.46 s, 3 runs), because the
+    32x-duplicated arrays widen the band self-join shuffle by more
+    than the saved scan.
     """
     banded = band_rows(documents, n=n, num_perm=num_perm, num_bands=num_bands)
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_id", "band_key"])
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    return verify_jaccard_pairs(cand, shingle_rows(documents, n=n), threshold)
+    return lsh_pairs(banded, shingle_rows(documents, n=n), threshold)
 
 
 _SIMHASH_SCHEMA = StructType(

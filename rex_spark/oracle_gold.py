@@ -238,17 +238,10 @@ def ensure_dedup_gold(sf_dir: str, n: int = 3) -> Dict[str, str]:
     with _lock:
         if key in _done:
             return paths
-        import numpy as np
         import pyarrow as pa
 
-        from .kernels.hashing import (
-            band_keys_batch,
-            minhash_params,
-            minhash_signatures_batch,
-            simhash64,
-        )
-        from .kernels.textnorm import ngrams
-        from .operators.dedup import NUM_BANDS, NUM_PERM
+        from .kernels.hashing import minhash_params, simhash64
+        from .operators.dedup import NUM_BANDS, NUM_PERM, _band_frame, _doc_shingles
 
         doc_ids, texts = _read_parquet_cols(
             os.path.join(sf_dir, "documents.parquet"), ["doc_id", "text"]
@@ -257,8 +250,7 @@ def ensure_dedup_gold(sf_dir: str, n: int = 3) -> Dict[str, str]:
         post_ids, post_sh = [], []
         sim_doc, sim_val, sim_cid, sim_chunk = [], [], [], []
         for doc_id, text in zip(doc_ids, texts):
-            toks = " ".join((text or "").lower().split()).split(" ")
-            sh = set(ngrams(toks, n))
+            sh = _doc_shingles(text, n)
             shingle_lists.append(sh)
             for g in sh:
                 post_ids.append(doc_id)
@@ -272,15 +264,15 @@ def ensure_dedup_gold(sf_dir: str, n: int = 3) -> Dict[str, str]:
                 sim_cid.append(cid)
                 sim_chunk.append((h >> (16 * cid)) & 0xFFFF)
 
-        sigs = minhash_signatures_batch(shingle_lists, minhash_params(NUM_PERM))
-        keys = band_keys_batch(sigs, NUM_BANDS).view(np.int64)
-        d = len(doc_ids)
+        bands = _band_frame(
+            doc_ids, shingle_lists, minhash_params(NUM_PERM), NUM_BANDS
+        )
         _write(
             f"{tag}/mh_bands.parquet",
             {
-                "doc_id": (np.repeat(np.asarray(doc_ids), NUM_BANDS), pa.int64()),
-                "band_id": (np.tile(np.arange(NUM_BANDS), d), pa.int32()),
-                "band_key": (keys.reshape(-1), pa.int64()),
+                "doc_id": (bands["doc_id"].to_numpy(), pa.int64()),
+                "band_id": (bands["band_id"].to_numpy(), pa.int32()),
+                "band_key": (bands["band_key"].to_numpy(), pa.int64()),
             },
         )
         _write(

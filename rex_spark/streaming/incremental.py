@@ -305,7 +305,8 @@ def compact_neardup_state(
     compaction (pinned by tests/test_streaming.py — a post-compaction
     wave still yields exact batch parity and an idle re-drain still
     appends nothing).  The rewrite lands in a sibling directory, is
-    row-count-verified, then swapped in with two renames — run it
+    row-count-verified, then swapped in with two renames
+    (``io.stages.swap_rewrite``, shared with ``StageStore.compact``) — run it
     BETWEEN drains (no active query may hold the state open), the
     same maintenance window Iceberg compaction wants.  A crash
     anywhere in the swap is recoverable: ``recover_compaction`` (run
@@ -317,7 +318,8 @@ def compact_neardup_state(
     """
     import glob
     import os
-    import shutil
+
+    from ..io.stages import swap_rewrite
 
     recover_compaction(state_root)
 
@@ -338,24 +340,11 @@ def compact_neardup_state(
             partitions or spark.sparkContext.defaultParallelism,
             max(before, 1),
         )
-        df = spark.read.parquet(path)
-        n_rows = df.count()
-        tmp = path + ".compacting"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            df.repartition(n_parts, keys[0])
-            .sortWithinPartitions(*keys)
-            .write.mode("overwrite")
-            .parquet(tmp)
+        swap_rewrite(
+            spark,
+            path,
+            lambda df: df.repartition(n_parts, keys[0]).sortWithinPartitions(*keys),
         )
-        if spark.read.parquet(tmp).count() != n_rows:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(f"compaction row-count mismatch for {name}")
-        old = path + ".pre-compact"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
         report[name] = (before, len(glob.glob(os.path.join(path, "*.parquet"))))
     return report
 

@@ -67,26 +67,67 @@ def test_cc_reliable_checkpoint_matches(spark, tmp_path):
     assert os.path.isdir(ckpt) and len(os.listdir(ckpt)) > 0
 
 
+def test_cc_unconverged_raises(spark, monkeypatch):
+    """A loop that runs out of rounds before the edge set is a star
+    forest must fail, not return labels from an unfinished graph: the
+    60-node chains need more than one round."""
+    import pytest
+
+    from rex_spark.operators import canonical
+
+    monkeypatch.setattr(canonical, "CC_MAX_ROUNDS", 1)
+    df = spark.createDataFrame(_hub_graph(), "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, driver_max_edges=0)
+
+
 def test_cc_empty_edges(spark):
     df = spark.createDataFrame([], "a long, b long")
     comp, _ = connected_components(df)
     assert comp.count() == 0
 
 
+def _max_bucket_rows(surfaces) -> int:
+    """Rows in the largest (band_id, band_key) bucket of the surfaces'
+    char-3-gram MinHash bands, computed in process."""
+    from rex_spark.kernels.hashing import minhash_params
+    from rex_spark.kernels.textnorm import char_shingles
+    from rex_spark.operators.canonical import NUM_BANDS, NUM_PERM
+    from rex_spark.operators.dedup import _band_frame
+    from rex_spark.oracle_gold import normalize_surface_py
+
+    sets = [set(char_shingles(normalize_surface_py(s), 3)) for s in surfaces]
+    sets = [s for s in sets if s]
+    banded = _band_frame(range(len(sets)), sets, minhash_params(NUM_PERM), NUM_BANDS)
+    return int(banded.groupby(["band_id", "band_key"]).size().max())
+
+
 def test_driver_canonicalization_matches_distributed(spark):
     """The driver-side small-vocabulary canonicalization (same kernels,
-    same banding) must produce exactly the distributed path's labels."""
-    from rex_spark.operators.canonical import canonicalize_surfaces
+    same banding) must produce exactly the distributed path's labels, on
+    the KG corpus's surfaces and on the 2,000-group open vocabulary of
+    tools/cc_soak.py.  The latter has band buckets above MAX_BUCKET, so
+    both paths' bucket caps are exercised, and its component count must
+    equal the soak's reference."""
+    from rex_spark.operators.canonical import MAX_BUCKET, canonicalize_surfaces
     from rex_spark.operators.extraction import extract_plane, plane_mentions
     from rex_spark.operators.textplane import clean_pages
     from rex_spark.pipeline import build_pages_df
+    from tools.cc_soak import build_surface_mentions, expected_components_py
 
-    mentions = plane_mentions(
+    kg = plane_mentions(
         extract_plane(clean_pages(build_pages_df(spark, 100, seed=42)))
     )
-    drv = canonicalize_surfaces(spark, mentions)
-    dist = canonicalize_surfaces(spark, mentions, driver_max_surfaces=0)
-    assert sorted(map(tuple, drv.collect())) == sorted(map(tuple, dist.collect()))
+    open_vocab = build_surface_mentions(spark, 2000)
+    surfaces = [r["surface"] for r in open_vocab.collect()]
+    assert _max_bucket_rows(surfaces) > MAX_BUCKET
+    for mentions in (kg, open_vocab):
+        drv = canonicalize_surfaces(spark, mentions)
+        dist = canonicalize_surfaces(spark, mentions, driver_max_surfaces=0)
+        dist_rows = sorted(map(tuple, dist.collect()))
+        assert sorted(map(tuple, drv.collect())) == dist_rows
+    n_components = len({r[3] for r in dist_rows})
+    assert n_components == expected_components_py(2000)["expected_components"]
 
 
 def test_salted_collect_slice_matches_unsalted(spark):

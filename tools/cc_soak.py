@@ -22,12 +22,13 @@ slack and groups share almost no shingles.
 
 The EXPECTED component count is not assumed to be n_groups: minhash
 banding is probabilistic recall (a 0.68-jaccard pair misses all 16
-bands with prob (1 - 0.68^4)^16 ~ 2%), so the expectation is computed
-by an EXACT in-process replica of the distributed edge logic (same
-normalize / char-3-gram / minhash / band-key kernels, then union-find
-per group).  The soak asserts the distributed result EQUALS the
-replica — banding misses and all — and separately reports the planted
--link recall those misses imply.
+bands with prob (1 - 0.68^4)^16 ~ 2%), so the expectation comes from
+the canonicalizer's in-process driver replica
+(oracle_gold._canonicalize_py: the same alias / exact-norm /
+MinHash-LSH edge logic, bucket cap and union-find, run on the driver
+over all 4*n_groups surfaces).  The soak asserts the distributed
+result EQUALS the replica — banding misses and all — and separately
+reports the planted-link recall those misses imply.
 
 Usage:
   PYTHONPATH=. python tools/cc_soak.py [n_groups] [--update-baseline]
@@ -39,10 +40,30 @@ wall seconds per stage.  With --update-baseline, rewrites the
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 
 from pyspark.sql import functions as F
+
+
+def _surface(gid, variant):
+    """JVM expression for variant ``variant`` (0-3) of group ``gid``."""
+    hex12 = F.substring(F.md5(gid.cast("string")), 1, 12)
+    return (
+        F.when(variant == 0, F.concat(hex12, F.lit(" corp")))
+        .when(variant == 1, F.concat(hex12, F.lit(" corporation")))
+        .when(variant == 2, F.concat(hex12, F.lit(" corp.")))
+        .otherwise(F.concat(F.lit("the "), hex12, F.lit(" corp")))
+        .alias("surface")
+    )
+
+
+def group_surfaces(gid: int) -> list:
+    """The four surfaces of group ``gid``, in variant order (in-process
+    twin of ``_surface``)."""
+    h = hashlib.md5(str(gid).encode()).hexdigest()[:12]
+    return [f"{h} corp", f"{h} corporation", f"{h} corp.", f"the {h} corp"]
 
 
 def build_surface_mentions(spark, n_groups: int):
@@ -50,15 +71,7 @@ def build_surface_mentions(spark, n_groups: int):
     executors (spark.range -> JVM string exprs; no Python UDF)."""
     ids = spark.range(n_groups * 4)
     gid = (F.col("id") / 4).cast("long")
-    variant = F.pmod(F.col("id"), F.lit(4))
-    hex12 = F.substring(F.md5(gid.cast("string")), 1, 12)
-    surface = (
-        F.when(variant == 0, F.concat(hex12, F.lit(" corp")))
-        .when(variant == 1, F.concat(hex12, F.lit(" corporation")))
-        .when(variant == 2, F.concat(hex12, F.lit(" corp.")))
-        .otherwise(F.concat(F.lit("the "), hex12, F.lit(" corp")))
-    )
-    return ids.select(surface.alias("surface"))
+    return ids.select(_surface(gid, F.pmod(F.col("id"), F.lit(4))))
 
 
 def zipf_counts(n_groups: int):
@@ -98,15 +111,8 @@ def build_surface_mentions_zipf(spark, n_groups: int):
         F.col("id").alias("gid"),
         F.explode(F.sequence(F.lit(0), (cnt - 1).cast("int"))).alias("m"),
     )
-    variant = F.pmod(F.col("m"), F.lit(4))
-    hex12 = F.substring(F.md5(F.col("gid").cast("string")), 1, 12)
-    surface = (
-        F.when(variant == 0, F.concat(hex12, F.lit(" corp")))
-        .when(variant == 1, F.concat(hex12, F.lit(" corporation")))
-        .when(variant == 2, F.concat(hex12, F.lit(" corp.")))
-        .otherwise(F.concat(F.lit("the "), hex12, F.lit(" corp")))
-    )
-    return mentions.select(surface.alias("surface")), int(c.sum()), head
+    surface = _surface(F.col("gid"), F.pmod(F.col("m"), F.lit(4)))
+    return mentions.select(surface), int(c.sum()), head
 
 
 def task_skew_report(spark, job_group: str):
@@ -156,101 +162,24 @@ TASK_SKEW_BOUND = 6.0
 
 
 def expected_components_py(n_groups: int) -> dict:
-    """FULL in-process replica of the edge logic over all 4*n_groups
-    surfaces: global exact-normalized-form groups, global LSH buckets
-    with the MAX_BUCKET degenerate-bucket drop (shared structural
-    shingles — " corp", "corporation" — put ~5% of band rows into
-    mega-buckets the distributed path drops), and exact-jaccard
-    verification of every in-bucket candidate — same kernels, same
-    caps, CROSS-GROUP candidates included (distinct md5 hexes CAN
-    collide on long suffixes and genuinely clear the 0.6 threshold:
-    measured 2 such merges per 20k groups).  Union-find over the whole
-    graph then yields the exact expected component count."""
-    import hashlib
-    from itertools import combinations
+    """Expected component count and intact-group count for the soak,
+    from the driver replica of the canonicalizer over all 4*n_groups
+    surfaces.  The replica builds the edges globally, so it includes the
+    MAX_BUCKET degenerate-bucket drop (shared structural shingles such
+    as " corp" and "corporation" fill a few mega-buckets) and
+    cross-group links (distinct md5 hexes can share long suffixes and
+    clear the 0.6 threshold: measured 2 such merges per 20k groups)."""
+    from collections import Counter
 
-    import numpy as np
+    from rex_spark.oracle_gold import _canonicalize_py
 
-    from rex_spark.kernels.hashing import (
-        band_keys_batch,
-        minhash_params,
-        minhash_signatures_batch,
-    )
-    from rex_spark.kernels.textnorm import char_shingles
-    from rex_spark.operators.canonical import (
-        JACCARD_THRESHOLD,
-        MAX_BUCKET,
-        NUM_BANDS,
-        NUM_PERM,
-    )
-    from rex_spark.oracle_gold import normalize_surface_py
-
-    params = minhash_params(NUM_PERM)
-    surfaces_of = lambda h: [  # noqa: E731
-        f"{h} corp", f"{h} corporation", f"{h} corp.", f"the {h} corp",
-    ]
-    hexes = [
-        hashlib.md5(str(g).encode()).hexdigest()[:12] for g in range(n_groups)
-    ]
-    flat_norms = [
-        normalize_surface_py(s) for h in hexes for s in surfaces_of(h)
-    ]
-    flat_sh = [set(char_shingles(nrm, 3)) for nrm in flat_norms]
-    sigs = minhash_signatures_batch(flat_sh, params)
-    keys = band_keys_batch(sigs, NUM_BANDS).view(np.int64).reshape(-1, NUM_BANDS)
-
-    n_nodes = len(flat_norms)
-    parent = list(range(n_nodes))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(x, y):
-        rx, ry = find(x), find(y)
-        if rx != ry:
-            parent[max(rx, ry)] = min(rx, ry)
-
-    # exact-normalized-form links (global, like _exact_norm_edges)
-    by_norm: dict = {}
-    for idx, nrm in enumerate(flat_norms):
-        by_norm.setdefault(nrm, []).append(idx)
-    for members in by_norm.values():
-        for other in members[1:]:
-            union(members[0], other)
-
-    # LSH candidate links: global buckets, degenerate buckets dropped,
-    # exact jaccard verified (like _lsh_edges)
-    buckets: dict = {}
-    for i in range(n_nodes):
-        for b in range(NUM_BANDS):
-            buckets.setdefault((b, int(keys[i, b])), []).append(i)
-    checked: set = set()
-    for members in buckets.values():
-        if len(members) < 2 or len(members) > MAX_BUCKET:
-            continue
-        for x, y in combinations(members, 2):
-            pair = (x, y) if x < y else (y, x)
-            if pair in checked:
-                continue
-            checked.add(pair)
-            shx, shy = flat_sh[x], flat_sh[y]
-            if (
-                shx
-                and shy
-                and len(shx & shy) / len(shx | shy) >= JACCARD_THRESHOLD
-            ):
-                union(x, y)
-
-    total = len({find(i) for i in range(n_nodes)})
-    intact = sum(
-        1
-        for g in range(n_groups)
-        if len({find(i) for i in range(4 * g, 4 * g + 4)}) == 1
-    )
-    return {"expected_components": total, "groups_intact": intact}
+    groups = [group_surfaces(g) for g in range(n_groups)]
+    ent_of = _canonicalize_py(Counter(s for grp in groups for s in grp))
+    intact = sum(len({ent_of[s] for s in grp}) == 1 for grp in groups)
+    return {
+        "expected_components": len(set(ent_of.values())),
+        "groups_intact": intact,
+    }
 
 
 def run_soak(spark, n_groups: int, zipf: bool = False) -> dict:
@@ -370,9 +299,9 @@ def main() -> None:
                 "case; SURVEY §2.3).",
                 "",
                 f"- components: {res['n_components']:,} == expected "
-                f"{res['expected_components']:,} (exact in-process replica "
-                "— the surface SET is identical to the uniform soak's, so "
-                "the expectation is too)",
+                f"{res['expected_components']:,} (the canonicalizer's "
+                "driver replica — the surface SET is identical to the "
+                "uniform soak's, so the expectation is too)",
                 f"- stage walls: nodes {res['t_nodes_s']} s, edges "
                 f"{res['t_edges_s']} s, CC {res['t_cc_s']} s "
                 f"({res['cc_iterations']} iterations)",
@@ -417,9 +346,10 @@ def main() -> None:
             f"- large-star/small-star converged in {res['cc_iterations']} "
             f"iterations, {res['t_cc_s']} s wall",
             f"- components: {res['n_components']:,} == expected "
-            f"{res['expected_components']:,} from the exact in-process "
-            f"replica of the edge logic ({res['t_replica_s']} s; same "
-            "normalize/shingle/minhash/band kernels + union-find)",
+            f"{res['expected_components']:,} from the canonicalizer's "
+            f"driver replica ({res['t_replica_s']} s; "
+            "oracle_gold._canonicalize_py: the same edge logic and "
+            "union-find, run in process)",
             f"- planted-link recall: {res['groups_intact']:,}/"
             f"{res['n_groups']:,} groups fully merged "
             f"({res['groups_intact'] / res['n_groups']:.1%}) — the misses "
