@@ -79,17 +79,16 @@ def swap_rewrite(
     spark: SparkSession,
     path: str,
     cluster: Callable[[DataFrame], DataFrame],
-    keep: tuple = (),
 ) -> int:
     """Rewrite the parquet directory ``path`` as ``cluster(df)`` through
     a verified sibling-directory swap; returns the row count.
 
     The rewrite lands in ``path.compacting`` and must hold exactly the
-    rows of ``path``.  The files named in ``keep`` (a commit marker) are
-    copied into it, and only then do two renames promote it
+    rows of ``path``.  A stage commit marker in ``path`` is copied into
+    it, and only then do two renames promote it
     (``path`` -> ``path.pre-compact``, ``path.compacting`` -> ``path``)
     before the old copy is deleted.  A crash therefore leaves the old
-    table whole, or the new one whole with its kept files;
+    table whole, or the new one whole and as committed as the old;
     ``streaming.incremental.recover_compaction`` rolls the near-dup
     state out of the window between the renames."""
     n_rows = spark.read.parquet(path).count()
@@ -99,9 +98,8 @@ def swap_rewrite(
     if spark.read.parquet(tmp).count() != n_rows:
         shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(f"compaction row-count mismatch for {path}")
-    for name in keep:
-        if os.path.exists(os.path.join(path, name)):
-            shutil.copy(os.path.join(path, name), os.path.join(tmp, name))
+    if os.path.exists(os.path.join(path, _MARKER)):
+        shutil.copy(os.path.join(path, _MARKER), os.path.join(tmp, _MARKER))
     old = path + ".pre-compact"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)
@@ -167,7 +165,7 @@ class ParquetStageBackend:
                 return df.repartition(partitions, *keys).sortWithinPartitions(*keys)
             return df.repartition(partitions)
 
-        return swap_rewrite(self.spark, self._dir(name), cluster, keep=(_MARKER,))
+        return swap_rewrite(self.spark, self._dir(name), cluster)
 
 
 class IcebergStageBackend:

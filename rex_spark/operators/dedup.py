@@ -304,8 +304,9 @@ def minhash_lsh_pairs(
     tests exploit.
 
     Composed from band_rows (banding), shingle_rows (verify side) and
-    lsh_pairs (self-join + exact verify), the same pieces the
-    incremental streaming dedup reuses.  Verify shingles ride their
+    lsh_pairs (self-join + verify_jaccard_pairs).  The incremental
+    streaming dedup reuses band_rows, shingle_rows and
+    verify_jaccard_pairs around its own new-x-history band join.  Verify shingles ride their
     own Arrow pass and are joined only to the candidate set, rather
     than being carried on the band rows: carrying them was measured
     slower at sf0.1 (median 1.54 s vs 1.46 s, 3 runs), because the

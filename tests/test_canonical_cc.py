@@ -102,32 +102,42 @@ def _max_bucket_rows(surfaces) -> int:
     return int(banded.groupby(["band_id", "band_key"]).size().max())
 
 
-def test_driver_canonicalization_matches_distributed(spark):
+def test_driver_canonicalization_matches_distributed(spark, monkeypatch):
     """The driver-side small-vocabulary canonicalization (same kernels,
     same banding) must produce exactly the distributed path's labels, on
     the KG corpus's surfaces and on the 2,000-group open vocabulary of
-    tools/cc_soak.py.  The latter has band buckets above MAX_BUCKET, so
-    both paths' bucket caps are exercised, and its component count must
-    equal the soak's reference."""
-    from rex_spark.operators.canonical import MAX_BUCKET, canonicalize_surfaces
+    tools/cc_soak.py.  The latter has band buckets above MAX_BUCKET, and
+    it is run again with a cap of 10, which changes its component count:
+    a path that ignored the cap would disagree with the other and with
+    the soak's reference."""
+    from rex_spark.operators import canonical
     from rex_spark.operators.extraction import extract_plane, plane_mentions
     from rex_spark.operators.textplane import clean_pages
     from rex_spark.pipeline import build_pages_df
     from tools.cc_soak import build_surface_mentions, expected_components_py
 
+    def n_components(mentions) -> int:
+        drv = canonical.canonicalize_surfaces(spark, mentions)
+        dist = canonical.canonicalize_surfaces(
+            spark, mentions, driver_max_surfaces=0
+        )
+        dist_rows = sorted(map(tuple, dist.collect()))
+        assert sorted(map(tuple, drv.collect())) == dist_rows
+        return len({r[3] for r in dist_rows})
+
     kg = plane_mentions(
         extract_plane(clean_pages(build_pages_df(spark, 100, seed=42)))
     )
+    n_components(kg)
     open_vocab = build_surface_mentions(spark, 2000)
     surfaces = [r["surface"] for r in open_vocab.collect()]
-    assert _max_bucket_rows(surfaces) > MAX_BUCKET
-    for mentions in (kg, open_vocab):
-        drv = canonicalize_surfaces(spark, mentions)
-        dist = canonicalize_surfaces(spark, mentions, driver_max_surfaces=0)
-        dist_rows = sorted(map(tuple, dist.collect()))
-        assert sorted(map(tuple, drv.collect())) == dist_rows
-    n_components = len({r[3] for r in dist_rows})
-    assert n_components == expected_components_py(2000)["expected_components"]
+    assert _max_bucket_rows(surfaces) > canonical.MAX_BUCKET
+    n_default = n_components(open_vocab)
+    assert n_default == expected_components_py(2000)["expected_components"]
+    monkeypatch.setattr(canonical, "MAX_BUCKET", 10)
+    n_capped = n_components(open_vocab)
+    assert n_capped == expected_components_py(2000)["expected_components"]
+    assert n_capped != n_default
 
 
 def test_salted_collect_slice_matches_unsalted(spark):

@@ -6,6 +6,7 @@ invariants that the pinned-output unit tests cannot cover exhaustively
 tag soup (the byte-identity contract's fuzz gate).
 """
 
+import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from rex_spark.kernels.hashing import (
@@ -22,6 +23,7 @@ from rex_spark.kernels.textnorm import (
     html_to_text,
     sent_seg,
 )
+from rex_spark.operators.dedup import _band_frame
 
 # -- html differential ------------------------------------------------------
 
@@ -127,6 +129,18 @@ def test_minhash_batch_equals_scalar(docs):
     keys = band_keys_batch(batch, 8)
     for i in range(len(docs)):
         assert keys[i].tolist() == band_keys(batch[i].tolist(), 8)
+    # _band_frame's row layout against the scalar kernels: row
+    # (doc_id=i, band_id=b) carries scalar band b of doc i, int64 view
+    frame = _band_frame(range(len(docs)), [set(d) for d in docs], params, 8)
+    got = {
+        (int(i), int(b)): int(k)
+        for i, b, k in frame[["doc_id", "band_id", "band_key"]].itertuples(index=False)
+    }
+    assert len(got) == len(frame) == 8 * len(docs)
+    for i, d in enumerate(docs):
+        scalar = band_keys(minhash_signature(sorted(set(d)), params), 8)
+        for b in range(8):
+            assert got[(i, b)] == int(np.uint64(scalar[b]).view(np.int64))
 
 
 @given(st.text(alphabet=st.characters(min_codepoint=33, max_codepoint=0x2FF),
